@@ -9,17 +9,13 @@ banded buckets against the store, and GDPR retraction / as-of time
 travel must hold on the persisted artifact exactly as they do for the
 LSH-postings and IVF-PQ stacks.
 
-Layout (indexstore manifest, one atomic commit per mutation):
-
-- ``signatures/ingest=<label>/band=<b>/``: one row per (media id,
-  band) — the 16-bit band value ``v`` is the LSH bucket key, and the
-  FULL 4-band signature (h0..h3) rides on every row so the Hamming
-  verify after a bucket join is a map-side expression (the
-  near_dup_pairs discipline — no re-join against a signature table).
-- ``tombstones/ingest=<label>/``: retracted id lists
-  (indexstore.retract_ids) — reads subtract them via a broadcast
-  anti-join ABOVE the band-pruned scan, so retraction never costs the
-  index its partition pruning.
+Layout: ``signatures/ingest=<label>/band=<b>/`` holds one row per
+(media id, band) — the 16-bit band value ``v`` is the LSH bucket key,
+and the FULL 4-band signature (h0..h3) rides on every row so the
+Hamming verify after a bucket join is a map-side expression (the
+near_dup_pairs discipline — no re-join against a signature table).
+Visibility, retraction, full compaction and as-of reads follow the
+segment-index contract in operators/indexstore.py.
 
 Scale: signatures are 4 ints per media row (KBs per million items per
 band); refresh signs only the batch (one Arrow pass) and its bucket
@@ -39,14 +35,12 @@ from pyspark.sql import functions as F
 
 from ..operators.indexstore import (
     commit_ingest,
-    committed_max_id,
-    data_labels,
-    entries_as_of,
+    compact,
     next_auto_label,
-    read_ingests,
+    read_visible,
     require_manifested,
+    require_monotone,
     retract_ids,
-    subtract_tombstones,
 )
 from .binary import _check_banding_exact, perceptual_dhash
 
@@ -134,12 +128,7 @@ def refresh_dhash_index(
         F.min(id_col), F.max(id_col), (F.count("*") / 4).cast("long")
     ).head()
     if check_monotone:
-        hi = committed_max_id(index_dir, exclude={label})
-        if hi is not None and lo is not None and lo <= hi:
-            raise ValueError(
-                f"non-monotone refresh: new batch min {id_col}={lo} <= "
-                f"stored max {id_col}={hi}"
-            )
+        require_monotone(index_dir, label, lo, id_col)
     _write_sigs(rows, index_dir, label)
     commit_ingest(index_dir, label, max_id=mx, rows=n)
     return label
@@ -152,31 +141,10 @@ def retract_from_dhash_index(
     id_col: str = "doc_id",
     label: str | None = None,
 ) -> str:
-    """GDPR-style removal of media ids: a tombstone ingest published
-    by one atomic manifest commit (indexstore.retract_ids — the exact
-    discipline of the dedup and ANN stacks).  After this commit the
-    retracted media are gone from every read: signature reads,
-    in-index pair discovery, and probe searches.  Returns the label."""
-    require_manifested(index_dir, SIG_SUB)
-    # plain id lists pass through: retract_ids lands them via the
-    # bounded-artifact driver-side write (r14)
-    return retract_ids(spark, index_dir, ids, id_col, label)
-
-
-def _scoped_labels(
-    index_dir: str, as_of: str | None
-) -> tuple[list[str], list[str] | None]:
-    """(data labels, tombstone labels) for a read — the full committed
-    sets when ``as_of`` is None, else the manifest prefix ending at the
-    label (later ingests invisible, only tombstones committed by then
-    applied — the read_verdicts / read_cells time-travel contract)."""
-    if as_of is None:
-        return data_labels(index_dir), None
-    pre = entries_as_of(index_dir, as_of)
-    return (
-        [e["label"] for e in pre if e.get("kind") != "tombstone"],
-        [e["label"] for e in pre if e.get("kind") == "tombstone"],
-    )
+    """GDPR-style removal of media ids (indexstore.retract_ids): the
+    retracted media leave signature reads, in-index pair discovery and
+    probe searches.  Returns the label."""
+    return retract_ids(spark, index_dir, SIG_SUB, ids, id_col, label)
 
 
 def read_dhash_band_rows(
@@ -185,16 +153,11 @@ def read_dhash_band_rows(
     id_col: str = "doc_id",
     as_of: str | None = None,
 ) -> DataFrame:
-    """The committed, tombstone-subtracted band postings ``(id, h0..h3,
-    band, v)`` — manifest-scoped (torn ingests invisible); the
-    anti-join sits ABOVE the scan so band partition pruning survives
-    retraction (plan-guarded by tests/test_multimodal_index.py)."""
-    require_manifested(index_dir, SIG_SUB)
-    dl, tl = _scoped_labels(index_dir, as_of)
-    df = read_ingests(spark, index_dir, SIG_SUB, dl)
-    if df is None:
-        raise ValueError(f"empty index (no committed ingests): {index_dir}")
-    return subtract_tombstones(spark, index_dir, df, id_col, tl)
+    """The visible band postings ``(id, h0..h3, band, v)`` at the head
+    or ``as_of`` a committed label (indexstore.read_visible; band
+    pruning surviving retraction is plan-guarded by
+    tests/test_multimodal_index.py)."""
+    return read_visible(spark, index_dir, SIG_SUB, id_col, as_of)
 
 
 def read_dhash_signatures(
@@ -301,49 +264,17 @@ def compact_dhash_index(
     index_dir: str,
     id_col: str = "doc_id",
 ) -> str:
-    """FULL compaction: rewrite every committed signature ingest into
-    ONE (refresh cadence accumulates an ``ingest=`` directory per
-    batch — the small-file problem at real cadence) and make
-    retraction PHYSICAL — visible rows are re-read with tombstones
-    applied, so no stored row can still carry a retracted id, and the
-    tombstone entries are swapped out in the SAME atomic manifest
-    commit (the compact_lsh_index / ANN-compaction discipline).  Reads
-    are identical before and after; torn compactions are invisible
-    (the new directory only becomes visible at the swap) and a re-run
-    overwrites it.  As-of labels predating the compaction stop
-    resolving — compaction is the explicit history-rewrite point.
-    Returns the new label."""
-    from ..operators.indexstore import (
-        TOMBSTONES,
-        drop_ingest_dirs,
-        replace_ingests,
-        tombstone_labels,
-    )
+    """FULL compaction (indexstore.compact) of the signature postings
+    into one band-partitioned ingest.  The manifest ``rows`` counts
+    media items, so a recount divides the band rows by 4.  Returns the
+    new label."""
 
-    require_manifested(index_dir, SIG_SUB)
-    labels = data_labels(index_dir)
-    if not labels:
-        raise ValueError("nothing to compact")
-    tombs = tombstone_labels(index_dir)
-    rows = read_dhash_band_rows(spark, index_dir, id_col).localCheckpoint(
-        eager=True
-    )
-    new_label = next_auto_label(index_dir, prefix="c")
-    _write_sigs(rows.select(id_col, "h0", "h1", "h2", "h3", "band", "v"),
-                index_dir, new_label)
-    stats = rows.agg(
-        F.max(id_col).alias("mx"), (F.count("*") / 4).cast("long").alias("n")
-    ).head()
-    replace_ingests(
-        index_dir,
-        labels + tombs,
-        new_label,
-        max_id=stats["mx"],
-        rows=stats["n"],
-    )
-    drop_ingest_dirs(index_dir, SIG_SUB, labels)
-    drop_ingest_dirs(index_dir, TOMBSTONES, tombs)
-    return new_label
+    def write(read, labels, label, rows):
+        sigs = read(SIG_SUB).select(id_col, "h0", "h1", "h2", "h3", "band", "v")
+        _write_sigs(sigs, index_dir, label)
+        return {"rows": rows if rows is not None else sigs.count() // 4}
+
+    return compact(spark, index_dir, (SIG_SUB,), id_col, write)
 
 
 def incremental_near_dup_pairs(

@@ -31,11 +31,8 @@ The driver gate (``ann_incremental_index``) asserts exactly that
 equivalence per query, plus the planted-truth recall verdicts every
 ANN query here carries.
 
-Ingest visibility is MANIFEST-driven (operators/indexstore.py, VERDICT
-r6 #2 / ADVICE r6): cell writes land first, one atomic manifest commit
-publishes them; a torn refresh directory is invisible to search and a
-label-scoped replay overwrites it.  :func:`compact_ivf_index` rewrites
-N ingests into one under the same atomic-swap discipline.
+Visibility, retraction, full compaction and as-of reads follow the
+segment-index contract in operators/indexstore.py.
 """
 
 from __future__ import annotations
@@ -46,17 +43,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .indexstore import (
-    TOMBSTONES,
     commit_ingest,
-    data_labels,
-    drop_ingest_dirs,
+    compact,
     next_auto_label,
-    read_ingests,
-    replace_ingests,
+    read_visible,
     require_manifested,
     retract_ids,
-    subtract_tombstones,
-    tombstone_labels,
     write_artifact_parquet,
 )
 from .similarity import assign_cells, train_ivf_centroids
@@ -67,34 +59,42 @@ _CELLS = "cells"
 _BASE = "base"
 
 
+def _assigned(emb: DataFrame, cents, vec_col: str, id_col: str) -> DataFrame:
+    """``(id, v, cell)``: every vector assigned to its nearest frozen
+    centroid."""
+    return assign_cells(
+        emb.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")),
+        cents,
+    )
+
+
+def _write_cells(cells: DataFrame, index_dir: str, label: str) -> None:
+    """One cell-partitioned ingest directory (label-scoped overwrite)."""
+    cells.write.mode("overwrite").partitionBy("cell").parquet(
+        os.path.join(index_dir, _CELLS, f"ingest={label}")
+    )
+
+
+def _write_centroids(index_dir: str, cents) -> None:
+    """The frozen quantizer is n_cells rows — a bounded-artifact
+    driver-side write: same parquet table, no scheduled write job +
+    commit round per build."""
+    write_artifact_parquet(
+        os.path.join(index_dir, _CENTROIDS),
+        list(enumerate(cents)),
+        "cell int, centroid array<double>",
+    )
+
+
 def read_cells(
     spark: SparkSession,
     index_dir: str,
     id_col: str = "vec_id",
     as_of: str | None = None,
 ) -> DataFrame:
-    """All committed cell assignments (manifest-scoped — torn ingests
-    are invisible); retracted vectors are subtracted
-    (:func:`retract_from_ann_index`).  ``as_of`` reads the SNAPSHOT as
-    of a committed label — the manifest prefix ending there, exactly
-    incremental.read_verdicts' Delta-style time travel: later ingests
-    are invisible and only tombstones committed up to that point
-    apply (compaction rewrites history; as-of labels must predate it).
-    A pre-manifest index fails loudly instead of reading as empty
-    (ADVICE r7)."""
-    from .indexstore import entries_as_of
-
-    require_manifested(index_dir, _CELLS)
-    if as_of is None:
-        dl, tl = data_labels(index_dir), None
-    else:
-        pre = entries_as_of(index_dir, as_of)
-        dl = [e["label"] for e in pre if e.get("kind") != "tombstone"]
-        tl = [e["label"] for e in pre if e.get("kind") == "tombstone"]
-    df = read_ingests(spark, index_dir, _CELLS, dl)
-    if df is None:
-        raise ValueError(f"empty index (no committed ingests): {index_dir}")
-    return subtract_tombstones(spark, index_dir, df, id_col, tl)
+    """The visible cell assignments at the head or ``as_of`` a
+    committed label (indexstore.read_visible)."""
+    return read_visible(spark, index_dir, _CELLS, id_col, as_of)
 
 
 def retract_from_ann_index(
@@ -104,19 +104,12 @@ def retract_from_ann_index(
     id_col: str = "vec_id",
     label: str | None = None,
 ) -> str:
-    """GDPR-style removal from the persisted IVF / IVF-PQ index: after
-    this commit the retracted vectors are gone from every search —
-    the same tombstone discipline as incremental.retract_from_index
-    (indexstore.retract_ids): a KB-sized id list committed atomically
-    with ``kind="tombstone"``, subtracted from every cells read by a
-    broadcast anti-join, made physical by the next FULL compaction.
-    The frozen quantizer (centroids/codebooks) is untouched — it is a
-    statistical artifact, not per-vector data, the same posture as a
-    trained tokenizer surviving document deletion."""
-    require_manifested(index_dir, _CELLS)
-    # plain id lists pass through: retract_ids lands them via the
-    # bounded-artifact driver-side write (r14)
-    return retract_ids(spark, index_dir, ids, id_col, label)
+    """GDPR-style removal (indexstore.retract_ids): the retracted
+    vectors leave every search.  The frozen quantizer (centroids,
+    codebooks) is untouched — it is a statistical artifact, not
+    per-vector data, the same posture as a trained tokenizer surviving
+    document deletion.  Returns the label."""
+    return retract_ids(spark, index_dir, _CELLS, ids, id_col, label)
 
 
 def build_ivf_index(
@@ -132,22 +125,8 @@ def build_ivf_index(
     refresh loop can seed its cache without re-reading them (VERDICT
     r7 #6)."""
     cents = train_ivf_centroids(emb, n_cells, refine_iters, vec_col, id_col)
-    # the frozen quantizer is n_cells rows — bounded-artifact driver-
-    # side write (r14, guide §1.2): same parquet table, no scheduled
-    # write job + commit round per build
-    write_artifact_parquet(
-        os.path.join(index_dir, _CENTROIDS),
-        [(i, v) for i, v in enumerate(cents)],
-        "cell int, centroid array<double>",
-    )
-    assign_cells(
-        emb.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
-        ),
-        cents,
-    ).write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_dir, _CELLS, f"ingest={_BASE}")
-    )
+    _write_centroids(index_dir, cents)
+    _write_cells(_assigned(emb, cents, vec_col, id_col), index_dir, _BASE)
     commit_ingest(index_dir, _BASE)
     return cents
 
@@ -199,14 +178,7 @@ def refresh_ivf_index(
     cents = (
         centroids if centroids is not None else load_centroids(spark, index_dir)
     )
-    assign_cells(
-        new_emb.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
-        ),
-        cents,
-    ).write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_dir, _CELLS, f"ingest={label}")
-    )
+    _write_cells(_assigned(new_emb, cents, vec_col, id_col), index_dir, label)
     commit_ingest(index_dir, label)
     return cents
 
@@ -302,46 +274,19 @@ def search_ivf_index(
 def compact_ivf_index(
     spark: SparkSession,
     index_dir: str,
-    labels: list[str] | None = None,
     id_col: str = "vec_id",
 ) -> str:
-    """Rewrite N committed cell ingests into ONE (VERDICT r6 #2): at
-    real refresh cadence the per-ingest directories are a small-file
-    problem — every probed cell opens one file per ingest.  Compaction
-    reads the chosen ingests' assignments (centroids are untouched:
-    the quantizer is frozen), rewrites them as a single cell-
-    partitioned ingest, and publishes with one atomic manifest swap;
-    search results are identical before and after.  Torn-compaction
-    discipline as in incremental.compact_lsh_index: the new directory
-    is invisible until the swap, replaced directories are deleted
-    best-effort after (already invisible).  Returns the new label."""
-    committed = data_labels(index_dir)
-    labels = list(labels) if labels is not None else committed
-    if not labels:
-        raise ValueError("nothing to compact")
-    missing = set(labels) - set(committed)
-    if missing:
-        raise ValueError(f"cannot compact uncommitted ingests: {sorted(missing)}")
-    # a FULL compaction makes retraction physical and clears the
-    # tombstones in the same manifest swap (incremental.py discipline)
-    tomb_labels = (
-        tombstone_labels(index_dir) if set(labels) == set(committed) else []
-    )
-    new_label = next_auto_label(index_dir, prefix="c")
-    cells = subtract_tombstones(
-        spark,
-        index_dir,
-        read_ingests(spark, index_dir, _CELLS, labels),
-        id_col,  # the caller's id column, never a hardcoded name (ADVICE r9)
-    )
-    data_cols = [c for c in cells.columns if c not in ("ingest",)]
-    cells.select(*data_cols).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(os.path.join(index_dir, _CELLS, f"ingest={new_label}"))
-    replace_ingests(index_dir, labels + tomb_labels, new_label)
-    drop_ingest_dirs(index_dir, _CELLS, labels)
-    drop_ingest_dirs(index_dir, TOMBSTONES, tomb_labels)
-    return new_label
+    """FULL compaction (indexstore.compact) of the cell store into one
+    cell-partitioned ingest — every probed cell then opens one file
+    instead of one per ingest.  The frozen quantizer is untouched and
+    search results are identical before and after.  Returns the new
+    label."""
+
+    def write(read, labels, label, rows):
+        _write_cells(read(_CELLS).drop("ingest"), index_dir, label)
+        return {}
+
+    return compact(spark, index_dir, (_CELLS,), id_col, write)
 
 
 # ---------------------------------------------------------------------------
@@ -454,26 +399,14 @@ def build_ivf_pq_index(
     )
     # both frozen quantizers are KB-sized — bounded-artifact driver-
     # side writes (r14, guide §1.2)
-    write_artifact_parquet(
-        os.path.join(index_dir, _CENTROIDS),
-        [(i, v) for i, v in enumerate(cents)],
-        "cell int, centroid array<double>",
-    )
+    _write_centroids(index_dir, cents)
     write_artifact_parquet(
         os.path.join(index_dir, _CODEBOOKS),
         [(s, c, v) for s, book in enumerate(books) for c, v in enumerate(book)],
         "sub int, code int, centroid array<double>",
     )
-    _pq_coded(
-        assign_cells(
-            emb.select(
-                F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
-            ),
-            cents,
-        ),
-        books,
-    ).write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_dir, _CELLS, f"ingest={_BASE}")
+    _write_cells(
+        _pq_coded(_assigned(emb, cents, vec_col, id_col), books), index_dir, _BASE
     )
     commit_ingest(index_dir, _BASE, pq=True)
     return cents, books
@@ -518,16 +451,10 @@ def refresh_ivf_pq_index(
         centroids if centroids is not None else load_centroids(spark, index_dir)
     )
     books = codebooks if codebooks is not None else load_codebooks(spark, index_dir)
-    _pq_coded(
-        assign_cells(
-            new_emb.select(
-                F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
-            ),
-            cents,
-        ),
-        books,
-    ).write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_dir, _CELLS, f"ingest={label}")
+    _write_cells(
+        _pq_coded(_assigned(new_emb, cents, vec_col, id_col), books),
+        index_dir,
+        label,
     )
     commit_ingest(index_dir, label, pq=True)
     return cents, books

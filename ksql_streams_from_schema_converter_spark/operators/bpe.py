@@ -354,19 +354,9 @@ def load_bpe_merges(
     """Read a committed merge list (highest ``seq`` when None) in
     training order — manifest-scoped, so torn saves are invisible; the
     collect is the bounded trained artifact (n_merges rows)."""
-    from .indexstore import read_artifact_rows, read_manifest
+    from .indexstore import read_artifact_rows, resolve_version
 
-    entries = [
-        e for e in read_manifest(store_dir) if e.get("kind") == "bpe_tokenizer"
-    ]
-    if seq is not None:
-        entries = [e for e in entries if e.get("seq") == seq]
-    if not entries:
-        raise ValueError(
-            f"tokenizer store {store_dir} has no committed BPE merge list"
-            + (f" with seq={seq}" if seq is not None else "")
-        )
-    best = max(entries, key=lambda e: e["seq"])
+    best = resolve_version(store_dir, "bpe_tokenizer", seq, "BPE merge list")
     rows = read_artifact_rows(store_dir, BPE_SUB, [best["label"]])
     return (
         [r["pair"] for r in sorted(rows, key=lambda r: r["merge_rank"])],

@@ -1308,20 +1308,10 @@ def load_kmeans_model(
         artifact_row_count,
         read_artifact_rows,
         read_ingests,
-        read_manifest,
+        resolve_version,
     )
 
-    entries = [
-        e for e in read_manifest(store_dir) if e.get("kind") == "kmeans"
-    ]
-    if seq is not None:
-        entries = [e for e in entries if e.get("seq") == seq]
-    if not entries:
-        raise ValueError(
-            f"store {store_dir} has no committed k-means model"
-            + (f" with seq={seq}" if seq is not None else "")
-        )
-    best = max(entries, key=lambda e: e["seq"])
+    best = resolve_version(store_dir, "kmeans", seq, "k-means model")
     # bounded models (parquet FOOTER row count at or under the state
     # cap — covers legacy Spark-written stores too) load driver-side
     # and return as a LocalRelation: no scheduled read job per load,

@@ -21,10 +21,8 @@ is a fraction of a percent of the corpus.  The incremental contract:
   old-vs-old pairs are never recomputed (old ids never sit on the
   probe side), and the index is extended by appending the new batch's
   postings + verdicts — after which a further refresh composes.
-- Ingest visibility is MANIFEST-driven (operators/indexstore.py):
-  data writes land first, one atomic manifest commit publishes them;
-  torn directories are invisible and label-scoped replay overwrites
-  them (ADVICE r6).
+- Visibility, retraction, full compaction and as-of reads follow the
+  segment-index contract in operators/indexstore.py.
 
 Keep rule (shared with the oracle): a document is DROPPED iff some
 document with a smaller id shares any (band, key) bucket with it.
@@ -89,9 +87,7 @@ Scale: each refresh costs shingling of the NEW batch only, plus one
 equi-join keyed by (band, key) between the batch's postings and the
 pruned index slice.  Appending postings is a blind parquet write of a
 new ingest directory; no old file is rewritten (the merge.py
-bucketed-state discipline, applied to an index).  Refresh cadence
-accumulates one directory per ingest — :func:`compact_lsh_index`
-rewrites N ingests into one under the same atomic-publish discipline.
+bucketed-state discipline, applied to an index).
 """
 
 from __future__ import annotations
@@ -105,19 +101,17 @@ from pyspark.sql import functions as F
 from .dedup import lsh_band_rows
 from .indexstore import (
     commit_ingest,
-    committed_max_id,
+    compact,
     data_labels,
-    drop_ingest_dirs,
     next_auto_label,
     read_ingests,
     read_manifest,
-    replace_ingests,
+    read_visible,
     require_manifested,
+    require_monotone,
     retract_ids,
     subtract_tombstones,
-    tombstone_labels,
 )
-from .indexstore import TOMBSTONES as _TOMBS
 
 _BANDS = "bands"
 _DOCS = "docs"
@@ -194,28 +188,14 @@ def retract_from_index(
     id_col: str = "doc_id",
     label: str | None = None,
 ) -> str:
-    """GDPR-style removal from the persisted LSH index: after this
-    commit, the retracted documents are gone from every read —
-    :func:`read_verdicts` no longer returns them and future refreshes
-    no longer match against their postings (a new document identical
-    to a retracted one is KEPT: the content no longer exists in the
-    corpus).  Documents dropped BEFORE the retraction because they
-    duplicated a now-retracted doc STAY dropped — the index is
-    append-only history and retroactive re-election would require
-    re-deduping the corpus, which is a rebuild, not a retraction (the
-    same posture as the monotone-ingest contract).
-
-    Mechanics follow the ingest discipline: the id list lands as a
-    tombstone ingest (``tombstones/ingest=<label>``), published by one
-    atomic manifest commit carrying ``kind="tombstone"`` — torn writes
-    invisible, label-scoped replay idempotent.  Reads subtract the
-    tombstone set via a broadcast anti-join (tombstones are id lists —
-    KBs at any corpus size); a FULL compaction makes the removal
-    physical and clears the tombstones.  Returns the label."""
-    require_manifested(index_dir, _DOCS)
-    # plain id lists pass through: retract_ids lands them via the
-    # bounded-artifact driver-side write (r14)
-    return retract_ids(spark, index_dir, ids, id_col, label)
+    """GDPR-style removal (indexstore.retract_ids): the retracted
+    documents leave every verdict read, and future refreshes no longer
+    match against their postings — a new document identical to a
+    retracted one is KEPT.  Documents dropped BEFORE the retraction
+    because they duplicated a now-retracted doc STAY dropped: the index
+    is append-only history, and re-electing them would be a rebuild
+    (the monotone-ingest posture).  Returns the label."""
+    return retract_ids(spark, index_dir, _DOCS, ids, id_col, label)
 
 
 def _split_labels_by_layout(
@@ -309,29 +289,9 @@ def read_verdicts(
     id_col: str = "doc_id",
     as_of: str | None = None,
 ) -> DataFrame:
-    """The committed verdict table ``(id, kept)`` — manifest-scoped,
-    so torn ingests are invisible; retracted ids are subtracted
-    (:func:`retract_from_index`).  ``as_of`` reads the SNAPSHOT as of
-    a committed label (the manifest prefix ending there — Delta-style
-    time travel on the index's own commit log): later ingests are
-    invisible and only tombstones committed up to that point apply.
-    A pre-manifest index fails loudly instead of reading as empty
-    (ADVICE r7).  NOTE: compaction REWRITES history (N entries become
-    one), so as-of labels must predate the last compaction covering
-    them — the standard log-compaction trade."""
-    from .indexstore import entries_as_of
-
-    require_manifested(index_dir, _DOCS)
-    if as_of is None:
-        dl, tl = data_labels(index_dir), None
-    else:
-        pre = entries_as_of(index_dir, as_of)
-        dl = [e["label"] for e in pre if e.get("kind") != "tombstone"]
-        tl = [e["label"] for e in pre if e.get("kind") == "tombstone"]
-    df = read_ingests(spark, index_dir, _DOCS, dl)
-    if df is None:
-        raise ValueError(f"empty index (no committed ingests): {index_dir}")
-    return subtract_tombstones(spark, index_dir, df, id_col, tl).select(
+    """The visible verdict table ``(id, kept)`` at the head or ``as_of``
+    a committed label (indexstore.read_visible)."""
+    return read_visible(spark, index_dir, _DOCS, id_col, as_of).select(
         id_col, "kept"
     )
 
@@ -422,16 +382,8 @@ def refresh_against_index(
         # the monotone-ingest contract (module docstring): a late
         # smaller id would need to retroactively flip a STORED verdict,
         # which an append-only index cannot do — fail loudly instead of
-        # silently diverging from the from-scratch answer.  The current
-        # label is excluded, so a REPLAYED batch never trips the guard
-        # on its own half-written first attempt.  hi comes from the
-        # manifest (O(1)), not a stored-table scan.
-        hi = committed_max_id(index_dir, exclude={label})
-        if hi is not None and lo is not None and lo <= hi:
-            raise ValueError(
-                f"non-monotone refresh: new batch min {id_col}={lo} <= "
-                f"stored max {id_col}={hi}"
-            )
+        # silently diverging from the from-scratch answer
+        require_monotone(index_dir, label, lo, id_col)
     stored = pruned_stored_postings(
         spark, index_dir, prior_labels, new_bands, id_col, key_pushdown_cap
     )
@@ -497,84 +449,24 @@ def refresh_against_index(
 def compact_lsh_index(
     spark: SparkSession,
     index_dir: str,
-    labels: list[str] | None = None,
     id_col: str = "doc_id",
 ) -> str:
-    """Rewrite N committed ingests into ONE (VERDICT r6 #2): refresh
-    cadence accumulates an ``ingest=`` directory per batch — a
-    small-file problem at real cadence.  Compaction reads the chosen
-    ingests' postings and verdicts, rewrites each as a single new
-    ingest (same band/kp layout, same key sort), and publishes with
-    one atomic manifest swap.  Search/verdict results are identical
-    before and after (same rows, one directory).  Torn-compaction
-    discipline: the new directories are invisible until the swap, so
-    a crash at any earlier point leaves the index untouched and a
-    re-run overwrites them; directories replaced by the swap are
-    deleted best-effort afterwards (already invisible).  The swap is
-    atomic for NEW reads — LAZY DataFrames built over the index before
-    compaction reference the replaced files and must be re-read (or
-    checkpointed first), standard parquet-rewrite semantics.  Returns
-    the new label."""
-    committed = data_labels(index_dir)
-    labels = list(labels) if labels is not None else committed
-    if not labels:
-        raise ValueError("nothing to compact")
-    missing = set(labels) - set(committed)
-    if missing:
-        raise ValueError(f"cannot compact uncommitted ingests: {sorted(missing)}")
-    new_label = next_auto_label(index_dir, prefix="c")
-    # a FULL compaction makes retraction physical: tombstoned rows are
-    # already filtered by the reads below, and with every data ingest
-    # rewritten no stored row can still carry a retracted id — the
-    # tombstone entries are swapped out in the SAME manifest commit.
-    # A subset compaction keeps them (other ingests may still hold
-    # retracted rows).
-    tomb_labels = (
-        tombstone_labels(index_dir) if set(labels) == set(committed) else []
-    )
-    # mixed-layout read, with the kp split RE-DECIDED on the combined
-    # row count — compaction is where a run of small band-only ingests
-    # graduates to the 256-way layout (module docstring).  The count
-    # comes from the manifest's per-ingest ``rows`` (O(1)); only
-    # entries predating the field cost a scan.
-    entries = {e["label"]: e for e in read_manifest(index_dir)}
-    counts = [entries.get(lb, {}).get("rows") for lb in labels]
-    postings = _stored_postings(spark, index_dir, labels, id_col).select(
-        id_col, "band", "key"
-    )
-    # with tombstones anywhere, the manifest row counts overcount the
-    # filtered read — recount (retraction is rare; the common path
-    # stays O(1) metadata)
-    n_rows = (
-        sum(counts)
-        if all(c is not None for c in counts)
-        and not tombstone_labels(index_dir)
-        else postings.count()
-    )
-    kp_split = n_rows >= KP_SPLIT_MIN_ROWS
-    _write_postings(postings, index_dir, new_label, kp_split)
-    verdicts = subtract_tombstones(
-        spark,
-        index_dir,
-        read_ingests(spark, index_dir, _DOCS, labels),
-        id_col,
-    )
-    verdicts.select(id_col, "kept").write.mode("overwrite").parquet(
-        os.path.join(index_dir, _DOCS, f"ingest={new_label}")
-    )
-    # the compacted entry inherits the max over exactly the ingests it
-    # replaces; entries that stay keep their own
-    replaced = [e for e in read_manifest(index_dir) if e["label"] in set(labels)]
-    maxes = [e["max_id"] for e in replaced if e.get("max_id") is not None]
-    replace_ingests(
-        index_dir,
-        labels + tomb_labels,
-        new_label,
-        max_id=max(maxes) if maxes else None,
-        kp_split=kp_split,
-        rows=n_rows,
-    )
-    drop_ingest_dirs(index_dir, _BANDS, labels)
-    drop_ingest_dirs(index_dir, _DOCS, labels)
-    drop_ingest_dirs(index_dir, _TOMBS, tomb_labels)
-    return new_label
+    """FULL compaction (indexstore.compact) of the postings and
+    verdicts into one ingest, with the kp split RE-DECIDED on the
+    combined row count — compaction is where a run of small band-only
+    ingests graduates to the 256-way layout (module docstring).
+    Returns the new label."""
+
+    def write(read, labels, label, rows):
+        postings = _stored_postings(spark, index_dir, labels, id_col).select(
+            id_col, "band", "key"
+        )
+        n_rows = rows if rows is not None else postings.count()
+        kp_split = n_rows >= KP_SPLIT_MIN_ROWS
+        _write_postings(postings, index_dir, label, kp_split)
+        read(_DOCS).select(id_col, "kept").write.mode("overwrite").parquet(
+            os.path.join(index_dir, _DOCS, f"ingest={label}")
+        )
+        return {"kp_split": kp_split, "rows": n_rows}
+
+    return compact(spark, index_dir, (_BANDS, _DOCS), id_col, write)

@@ -1,34 +1,68 @@
-"""Manifest-tracked ingest store shared by the persisted LSH dedup
-index (operators/incremental.py) and the persisted IVF ANN index
-(operators/ann_index.py).
+"""Manifest-tracked ingest store and the segment-index lifecycle shared
+by the three persisted indexes: the LSH dedup index
+(operators/incremental.py), the IVF / IVF-PQ ANN index
+(operators/ann_index.py) and the dHash signature index
+(multimodal/index.py).  Trained-artifact stores (tokenizers, k-means,
+quality and langid weights, bigram LMs) use the same manifest for
+versioned saves (:func:`resolve_version`).
 
 VERDICT r6 #2 / ADVICE r6: ingest discovery used to be a driver-side
 directory glob — O(#ingests) driver filesystem calls, not portable to
 object stores, and (worse) it counted TORN subdirectories: a crashed
 auto-labeled refresh left a half-written ``ingest=rN`` on disk, the
 next run counted it and took a NEW label, and the ghost postings
-stayed visible forever.  The manifest closes both holes:
+stayed visible forever.  The manifest closes both holes.
 
-- ``manifest.json`` at the index root is the SINGLE source of truth
-  for which ingests exist.  Readers list paths from it; a subdirectory
-  not in the manifest — torn write, crashed compaction, stray file —
-  is invisible no matter what is on disk.
-- An ingest becomes visible through exactly one atomic operation:
-  :func:`commit_ingest` rewrites the manifest via write-temp +
-  ``os.replace`` (atomic on POSIX; on an object store this maps to a
-  conditional put of a single small object).  Data writes happen
-  FIRST, the manifest commit LAST — the merge.py publish discipline —
-  so a crash anywhere before the commit leaves the index exactly as
-  it was, and a label-scoped replay overwrites the torn directory and
-  commits once.
-- :func:`replace_ingests` swaps N labels for one in a single manifest
-  rewrite — the compaction commit point.  A crash after the compacted
-  data lands but before the swap leaves the new directory invisible;
-  a crash after the swap leaves the old directories as invisible
-  garbage (deleted best-effort by the caller).
-- Each entry carries the ingest's ``max_id``, so the monotone-ingest
-  guard reads ONE small file instead of scanning the stored verdict
-  table — O(1) instead of O(index) per refresh.
+SEGMENT-INDEX CONTRACT (stated once here; the families keep only key
+derivation, refresh matching and search):
+
+- Committed-only visibility.  ``manifest.json`` at the index root is
+  the SINGLE source of truth for which ingests exist.  Readers list
+  paths from it; a subdirectory not in the manifest — torn write,
+  crashed compaction, stray file — is invisible no matter what is on
+  disk.  An ingest becomes visible through exactly one atomic
+  operation: :func:`commit_ingest` rewrites the manifest via
+  write-temp + ``os.replace`` (atomic on POSIX; on an object store
+  this maps to a conditional put of a single small object).  Data
+  writes happen FIRST, the manifest commit LAST — the merge.py publish
+  discipline — so a crash anywhere before the commit leaves the index
+  exactly as it was, and a label-scoped replay overwrites the torn
+  directory and commits once.  A pre-manifest index (data directories,
+  no manifest) fails loudly on every read, retraction and compaction
+  (:func:`require_manifested`) instead of reading as empty.
+- Monotone-ingest guard.  Each entry carries the ingest's ``max_id``,
+  so a refresh's guard reads ONE small file instead of scanning the
+  stored table (:func:`committed_max_id`).
+- Tombstones.  :func:`retract_ids` commits a retracted-id list as a
+  ``kind="tombstone"`` ingest under ``tombstones/``; every read
+  subtracts the tombstones committed up to its snapshot with a
+  broadcast anti-join ABOVE the (partition-pruned) data scan
+  (:func:`subtract_tombstones`, :func:`read_visible`).  Retraction is
+  logical until the next compaction.
+- Full compaction.  :func:`compact` rewrites EVERY committed data
+  ingest into one: it reads with tombstones subtracted, lets the
+  family write the new ingest, and swaps the old data AND tombstone
+  entries for the new one in ONE :func:`replace_ingests` commit — so
+  retraction becomes physical and the tombstones clear atomically.
+  The old directories are deleted best-effort afterwards (already
+  invisible).  A crash before the swap leaves the new directory
+  invisible and a re-run overwrites it.  The swap is atomic for NEW
+  reads; lazy DataFrames built before it reference the replaced files
+  and must be re-read (standard parquet-rewrite semantics).
+- Compacted-entry policy.  ``max_id`` is the max over the replaced
+  entries, read from the manifest with no Spark job — so retracting
+  the highest id and compacting never loosens the monotone guard.
+  ``rows`` is the sum of the replaced entries' ``rows``; only when
+  tombstones were applied (or an entry predates the field) does the
+  family recount.
+- As-of reads.  ``as_of=<label>`` reads the manifest PREFIX ending at
+  that label (:func:`visible_labels`) — Delta-style time travel on the
+  index's own commit log: later ingests are invisible and only the
+  tombstones committed by then apply.  Compaction rewrites history (N
+  entries become one), so the labels it replaced stop resolving — the
+  standard log-compaction trade.  A replayed commit moves its entry
+  to the end of the manifest; replay is content-idempotent, so
+  snapshot VALUES are unaffected.
 
 Single-writer assumption (same as the reference's pipeline registry
 and every parquet table here): one refresh/compaction driver mutates
@@ -88,6 +122,19 @@ def committed_max_id(index_dir: str, exclude: set[str] = frozenset()):
         if e["label"] not in exclude and e.get("max_id") is not None
     ]
     return max(vals) if vals else None
+
+
+def require_monotone(index_dir: str, label: str, lo, id_col: str) -> None:
+    """The monotone-ingest guard (module docstring): reject a refresh
+    batch whose smallest id ``lo`` is at or below the committed max.
+    ``label`` is excluded, so a REPLAYED batch never trips on its own
+    half-written first attempt."""
+    hi = committed_max_id(index_dir, exclude={label})
+    if hi is not None and lo is not None and lo <= hi:
+        raise ValueError(
+            f"non-monotone refresh: new batch min {id_col}={lo} <= "
+            f"stored max {id_col}={hi}"
+        )
 
 
 def _write_manifest(index_dir: str, entries: list[dict]) -> None:
@@ -358,51 +405,65 @@ def drop_ingest_dirs(index_dir: str, sub: str, labels: list[str]) -> None:
 
 
 # ---------------------------------------------------------------------------
-# retraction (GDPR removal) — shared tombstone discipline
+# the segment-index lifecycle (module docstring): tombstones, as-of
+# reads, full compaction
 # ---------------------------------------------------------------------------
 
 #: data subdirectory holding retracted-id ingests
 TOMBSTONES = "tombstones"
+#: tombstone-row count (from the parquet footers) up to which
+#: :func:`subtract_tombstones` reads the list driver-side and anti-joins
+#: a LocalRelation — no scheduled read job; a larger list keeps the
+#: distributed read
+TOMBSTONE_DRIVER_READ_MAX = 100_000
 
 
-def tombstone_labels(index_dir: str) -> list[str]:
-    """Committed tombstone ingest labels (manifest kind='tombstone')."""
-    return [
-        e["label"]
-        for e in read_manifest(index_dir)
-        if e.get("kind") == "tombstone"
-    ]
+def visible_labels(
+    index_dir: str, as_of: str | None = None
+) -> tuple[list[str], list[str]]:
+    """``(data labels, tombstone labels)`` a read resolves: every
+    committed entry, or the manifest prefix ending at ``as_of``
+    (inclusive — the manifest is commit-ordered, so a prefix IS a
+    point-in-time state)."""
+    entries = read_manifest(index_dir)
+    if as_of is not None:
+        names = [e["label"] for e in entries]
+        if as_of not in names:
+            raise ValueError(
+                f"label {as_of!r} not committed in {index_dir} "
+                f"(committed: {names})"
+            )
+        entries = entries[: names.index(as_of) + 1]
+    tombs = [e["label"] for e in entries if e.get("kind") == "tombstone"]
+    return [e["label"] for e in entries if e.get("kind") != "tombstone"], tombs
 
 
 def data_labels(index_dir: str) -> list[str]:
     """Committed DATA ingest labels — every manifest entry that is not
-    a tombstone.  All posting/verdict/cell read paths list from here so
-    a tombstone commit can never be misread as a data directory."""
-    return [
-        e["label"]
-        for e in read_manifest(index_dir)
-        if e.get("kind") != "tombstone"
-    ]
+    a tombstone, so a tombstone commit is never misread as data."""
+    return visible_labels(index_dir)[0]
 
 
 def retract_ids(
     spark: SparkSession,
     index_dir: str,
+    sub: str,
     ids,
     id_col: str,
     label: str | None = None,
 ) -> str:
-    """Commit a tombstone ingest: the id list lands as parquet under
+    """Commit a tombstone ingest for an index whose data lives under
+    ``sub``: the id list lands as parquet under
     ``tombstones/ingest=<label>`` FIRST, then one atomic manifest
     commit with ``kind="tombstone"`` publishes it — torn writes
-    invisible, label-scoped replay idempotent (the ingest discipline
-    applied to removals).  Returns the label.
+    invisible, label-scoped replay idempotent.  Returns the label.
 
     ``ids`` may be a DataFrame (distributed write — arbitrary size) or
     a plain iterable of ints (the GDPR-request shape: a KB-sized list
     already on the driver) — the latter lands via the bounded-artifact
     driver-side write (r14, guide §1.2: a distinct+coalesce(1) job +
     commit round per KB list is pure scheduling)."""
+    require_manifested(index_dir, sub)
     label = label or next_auto_label(index_dir, prefix="t")
     path = os.path.join(index_dir, TOMBSTONES, f"ingest={label}")
     if isinstance(ids, DataFrame):
@@ -434,16 +495,15 @@ def subtract_tombstones(
     if df is None:
         return None
     if labels is None:
-        labels = tombstone_labels(index_dir)
+        labels = visible_labels(index_dir)[1]
     if not labels:
         return df
     # tombstone lists are KB-sized by contract; when the parquet
     # FOOTERS confirm it, read them driver-side and anti-join against a
     # LocalRelation — the broadcast builds with no scheduled read job
-    # (r14, guide §1.2).  Oversized lists keep the distributed read.
     n = artifact_row_count(index_dir, TOMBSTONES, labels)
     vals = None
-    if n is not None and n <= 100_000:
+    if n is not None and n <= TOMBSTONE_DRIVER_READ_MAX:
         vals = sorted(
             {r[id_col] for r in read_artifact_rows(index_dir, TOMBSTONES, labels)}
         )
@@ -460,20 +520,77 @@ def subtract_tombstones(
     return df.join(F.broadcast(tomb), id_col, "left_anti")
 
 
-def entries_as_of(index_dir: str, label: str) -> list[dict]:
-    """Manifest prefix ending at ``label`` (inclusive) — the snapshot
-    a time-travel read resolves (the manifest is commit-ordered, so a
-    prefix IS a point-in-time state).  Caveat: a replayed commit moves
-    its entry to the end of the manifest; replay is content-idempotent
-    so the snapshot VALUES are unaffected, but an as-of read taken
-    between a label's original commit and its replay may see it in a
-    different position — single-writer stores replaying only in-flight
-    labels (the contract everywhere here) never observe this."""
-    entries = read_manifest(index_dir)
-    names = [e["label"] for e in entries]
-    if label not in names:
+def read_visible(
+    spark: SparkSession,
+    index_dir: str,
+    sub: str,
+    id_col: str,
+    as_of: str | None = None,
+) -> DataFrame:
+    """The visible rows of ``sub`` — committed ingests minus
+    tombstones, at the head or ``as_of`` a committed label.  The
+    anti-join sits ABOVE the scan, so partition pruning survives
+    retraction.  An empty index is an error."""
+    require_manifested(index_dir, sub)
+    data, tombs = visible_labels(index_dir, as_of)
+    df = read_ingests(spark, index_dir, sub, data)
+    if df is None:
+        raise ValueError(f"empty index (no committed ingests): {index_dir}")
+    return subtract_tombstones(spark, index_dir, df, id_col, tombs)
+
+
+def compact(
+    spark: SparkSession, index_dir: str, subs: tuple[str, ...], id_col: str, write
+) -> str:
+    """FULL compaction (module docstring) of an index whose data lives
+    under ``subs``.  ``write(read, labels, new_label, rows)`` is the
+    family's writer: ``read(sub)`` is the tombstone-subtracted read of
+    ``sub`` at the compacted ``labels``, and ``rows`` is the manifest
+    row sum, None when the writer must recount.  It writes the new
+    ingest and returns the compacted entry's extra manifest fields.
+    Returns the new label."""
+    for sub in subs:
+        require_manifested(index_dir, sub)
+    labels, tombs = visible_labels(index_dir)
+    if not labels:
+        raise ValueError("nothing to compact")
+    counts = [e.get("rows") for e in read_manifest(index_dir) if e["label"] in labels]
+    rows = None if tombs or None in counts else sum(counts)
+    new_label = next_auto_label(index_dir, prefix="c")
+
+    def read(sub: str) -> DataFrame:
+        df = read_ingests(spark, index_dir, sub, labels)
+        return subtract_tombstones(spark, index_dir, df, id_col, tombs)
+
+    meta = write(read, labels, new_label, rows)
+    replace_ingests(
+        index_dir,
+        labels + tombs,
+        new_label,
+        max_id=committed_max_id(index_dir),
+        **meta,
+    )
+    for sub in subs:
+        drop_ingest_dirs(index_dir, sub, labels)
+    drop_ingest_dirs(index_dir, TOMBSTONES, tombs)
+    return new_label
+
+
+def resolve_version(
+    store_dir: str, kind: str, seq: int | None, what: str
+) -> dict:
+    """The committed ``kind`` entry of a versioned-artifact store: the
+    one with ``seq``, or the highest ``seq`` when None.  A manifest
+    read only — no Spark job.  ``what`` names the artifact in the
+    error raised when no entry matches."""
+    entries = [
+        e
+        for e in read_manifest(store_dir)
+        if e.get("kind") == kind and (seq is None or e.get("seq") == seq)
+    ]
+    if not entries:
         raise ValueError(
-            f"label {label!r} not committed in {index_dir} "
-            f"(committed: {names})"
+            f"store {store_dir} has no committed {what}"
+            + (f" with seq={seq}" if seq is not None else "")
         )
-    return entries[: names.index(label) + 1]
+    return max(entries, key=lambda e: e["seq"])

@@ -328,19 +328,9 @@ def load_langid_weights(
     """Read a committed weight state (highest ``seq`` when None) —
     manifest-scoped, torn saves invisible.  The artifact is
     L·(n_buckets+1) integers, so the collect is bounded."""
-    from .indexstore import read_artifact_rows, read_manifest
+    from .indexstore import read_artifact_rows, resolve_version
 
-    entries = [
-        e for e in read_manifest(store_dir) if e.get("kind") == "langid"
-    ]
-    if seq is not None:
-        entries = [e for e in entries if e.get("seq") == seq]
-    if not entries:
-        raise ValueError(
-            f"store {store_dir} has no committed langid weights"
-            + (f" with seq={seq}" if seq is not None else "")
-        )
-    best = max(entries, key=lambda e: e["seq"])
+    best = resolve_version(store_dir, "langid", seq, "langid weights")
     out: dict[str, dict[int, int]] = {}
     for r in read_artifact_rows(store_dir, LANGID_SUB, [best["label"]]):
         out.setdefault(r["lang"], {})[r["b"]] = r["w"]

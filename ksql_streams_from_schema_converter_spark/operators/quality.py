@@ -384,19 +384,9 @@ def load_quality_weights(
     """Read a committed model version (highest ``seq`` when None) —
     manifest-scoped, so torn saves are invisible; the collect is the
     bounded n_buckets+1 rows (the k-means-centroid shape)."""
-    from .indexstore import read_artifact_rows, read_manifest
+    from .indexstore import read_artifact_rows, resolve_version
 
-    entries = [
-        e for e in read_manifest(store_dir) if e.get("kind") == "weights"
-    ]
-    if seq is not None:
-        entries = [e for e in entries if e.get("seq") == seq]
-    if not entries:
-        raise ValueError(
-            f"quality store {store_dir} has no committed model"
-            + (f" with seq={seq}" if seq is not None else "")
-        )
-    best = max(entries, key=lambda e: e["seq"])
+    best = resolve_version(store_dir, "weights", seq, "quality model")
     rows = read_artifact_rows(store_dir, WEIGHTS_SUB, [best["label"]])
     return {r["b"]: r["w"] for r in rows}, best["label"]
 

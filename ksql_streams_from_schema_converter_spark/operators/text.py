@@ -713,18 +713,8 @@ def load_bigram_lm(
     """Read a committed LM count table (highest ``seq`` when None) as
     a DataFrame — manifest-scoped, so torn saves are invisible.  Feed
     the result to ``bigram_backoff_surprisal(lm=...)``."""
-    from .indexstore import read_ingests, read_manifest
+    from .indexstore import read_ingests, resolve_version
 
-    entries = [
-        e for e in read_manifest(store_dir) if e.get("kind") == "bigram_lm"
-    ]
-    if seq is not None:
-        entries = [e for e in entries if e.get("seq") == seq]
-    if not entries:
-        raise ValueError(
-            f"store {store_dir} has no committed bigram LM"
-            + (f" with seq={seq}" if seq is not None else "")
-        )
-    best = max(entries, key=lambda e: e["seq"])
+    best = resolve_version(store_dir, "bigram_lm", seq, "bigram LM")
     df = read_ingests(spark, store_dir, BIGRAM_LM_SUB, [best["label"]])
     return df.select("kind", "w1", "w2", "c"), best["label"]

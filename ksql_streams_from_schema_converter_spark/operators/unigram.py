@@ -601,20 +601,8 @@ def load_unigram_vocab(
     manifest-scoped; the collect is the bounded trained artifact
     (≤ piece_cap + alphabet rows, the shape :func:`unigram_encode`
     holds in its task closure anyway)."""
-    from .indexstore import read_artifact_rows, read_manifest
+    from .indexstore import read_artifact_rows, resolve_version
 
-    entries = [
-        e
-        for e in read_manifest(store_dir)
-        if e.get("kind") == "unigram_tokenizer"
-    ]
-    if seq is not None:
-        entries = [e for e in entries if e.get("seq") == seq]
-    if not entries:
-        raise ValueError(
-            f"tokenizer store {store_dir} has no committed unigram vocabulary"
-            + (f" with seq={seq}" if seq is not None else "")
-        )
-    best = max(entries, key=lambda e: e["seq"])
+    best = resolve_version(store_dir, "unigram_tokenizer", seq, "unigram vocabulary")
     rows = read_artifact_rows(store_dir, UNIGRAM_SUB, [best["label"]])
     return {r["piece"]: r["score"] for r in rows}, best["label"]

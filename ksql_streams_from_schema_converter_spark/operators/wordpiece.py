@@ -537,18 +537,8 @@ def load_wordpiece_vocab(
     """Read a committed vocabulary version (highest ``seq`` when None)
     — manifest-scoped, so torn saves are invisible; the collect is the
     bounded trained artifact (alphabet + n_merges rows)."""
-    from .indexstore import read_artifact_rows, read_manifest
+    from .indexstore import read_artifact_rows, resolve_version
 
-    entries = [
-        e for e in read_manifest(store_dir) if e.get("kind") == "tokenizer"
-    ]
-    if seq is not None:
-        entries = [e for e in entries if e.get("seq") == seq]
-    if not entries:
-        raise ValueError(
-            f"tokenizer store {store_dir} has no committed vocabulary"
-            + (f" with seq={seq}" if seq is not None else "")
-        )
-    best = max(entries, key=lambda e: e["seq"])
+    best = resolve_version(store_dir, "tokenizer", seq, "WordPiece vocabulary")
     rows = read_artifact_rows(store_dir, TOKENIZER_SUB, [best["label"]])
     return {r["piece"] for r in rows}, best["label"]

@@ -40,13 +40,22 @@ def run_pipeline_stream(
     input and stops — the streaming analogue of a batch backfill, and
     what a 100 TB replay would use (checkpointed, restartable).
     """
-    pipeline = EtlPipeline(spec)
-    result = pipeline.apply(source)
+    sink = EtlPipeline(spec).apply(source).sink
+    return _start_sink(sink, output_path, checkpoint, trigger_available_now)
+
+
+def _start_sink(
+    sink: DataFrame,
+    output_path: str,
+    checkpoint: str | None,
+    trigger_available_now: bool,
+):
+    """Start the parquet ``writeStream`` of an applied pipeline's sink."""
     checkpoint = checkpoint or os.path.join(
         tempfile.gettempdir(), f"ksql_spark_ckpt_{uuid.uuid4().hex}"
     )
     writer = (
-        result.sink.writeStream.format("parquet")
+        sink.writeStream.format("parquet")
         .option("path", output_path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
@@ -71,19 +80,21 @@ def stream_to_batch(
     (stopping the query first) — reading the sink while the query still
     writes would silently return partial results. The read-back carries
     the sink's known schema so a zero-row drain returns an empty
-    DataFrame instead of failing parquet schema inference."""
+    DataFrame instead of failing parquet schema inference.  The
+    pipeline is applied once: the same sink feeds the writer and the
+    schema."""
     output_path = output_path or os.path.join(
         tempfile.gettempdir(), f"ksql_spark_out_{uuid.uuid4().hex}"
     )
-    sink_schema = EtlPipeline(spec).apply(source).sink.schema
-    q = run_pipeline_stream(spark, spec, source, output_path)
+    sink = EtlPipeline(spec).apply(source).sink
+    q = _start_sink(sink, output_path, None, True)
     if not q.awaitTermination(timeout_sec):
         q.stop()
         raise TimeoutError(
             f"streaming drain did not finish within {timeout_sec}s "
             f"(query {q.id} stopped; partial output at {output_path})"
         )
-    return spark.read.schema(sink_schema).parquet(output_path)
+    return spark.read.schema(sink.schema).parquet(output_path)
 
 
 def foreach_batch_upsert(df: DataFrame, write_fn, checkpoint: str):

@@ -4,13 +4,24 @@ only visibility, atomic compaction, and the refresh key-space pruning
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from ksql_streams_from_schema_converter_spark.multimodal import attach_fake_media
+from ksql_streams_from_schema_converter_spark.multimodal.index import (
+    build_dhash_index,
+    compact_dhash_index,
+    read_dhash_band_rows,
+    refresh_dhash_index,
+    retract_from_dhash_index,
+)
 from ksql_streams_from_schema_converter_spark.operators import indexstore as S
 from ksql_streams_from_schema_converter_spark.operators.ann_index import (
     build_ivf_index,
     compact_ivf_index,
+    read_cells,
     refresh_ivf_index,
+    retract_from_ann_index,
     search_ivf_index,
 )
 from ksql_streams_from_schema_converter_spark.operators.incremental import (
@@ -18,6 +29,7 @@ from ksql_streams_from_schema_converter_spark.operators.incremental import (
     compact_lsh_index,
     read_verdicts,
     refresh_against_index,
+    retract_from_index,
 )
 
 
@@ -788,3 +800,182 @@ def test_ann_index_custom_id_col_roundtrip(spark, tmp_path):
         spark, idx, queries, k=5, nprobe=4, id_col="item_id"
     ).collect()
     assert sorted(map(tuple, final)) == sorted(map(tuple, after))
+
+
+def _media(spark, lo, hi):
+    rows = [
+        (i, f"payload {i} " + "".join(chr(97 + (i * 7 + j * j) % 26) for j in range(80)))
+        for i in range(lo, hi)
+    ]
+    return attach_fake_media(spark.createDataFrame(rows, "doc_id long, text string"))
+
+
+@pytest.mark.parametrize("family", ["lsh", "dhash"])
+def test_compaction_keeps_monotone_guard_after_retracting_max_id(
+    spark, tmp_path, family
+):
+    """The compacted entry's ``max_id`` is the max over the replaced
+    manifest entries, never recomputed from the surviving rows: after
+    retracting the highest id and compacting, a refresh re-using that
+    id is still rejected, exactly as before the compaction."""
+    if family == "lsh":
+        build, refresh, retract, compact_ = (
+            build_lsh_index,
+            refresh_against_index,
+            retract_from_index,
+            compact_lsh_index,
+        )
+        rows = _corpus
+    else:
+        build, refresh, retract, compact_ = (
+            build_dhash_index,
+            refresh_dhash_index,
+            retract_from_dhash_index,
+            compact_dhash_index,
+        )
+        rows = _media
+    idx = str(tmp_path / family)
+    build(rows(spark, 0, 30), idx)
+    retract(spark, idx, [29])
+    with pytest.raises(ValueError, match="non-monotone refresh"):
+        refresh(spark, idx, rows(spark, 29, 32))
+    compact_(spark, idx)
+    assert S.committed_max_id(idx) == 29
+    assert not S.visible_labels(idx)[1]  # the tombstone was cleared
+    with pytest.raises(ValueError, match="non-monotone refresh"):
+        refresh(spark, idx, rows(spark, 29, 32))
+    refresh(spark, idx, rows(spark, 30, 32))  # a fresh id still ingests
+
+
+def test_tombstone_driver_read_threshold_both_sides(spark, tmp_path, monkeypatch):
+    """Below ``TOMBSTONE_DRIVER_READ_MAX`` the tombstones are read on
+    the driver and anti-joined as a LocalRelation; at 0 every list
+    takes the distributed tombstone scan.  Both sides return the same
+    rows for all three index families."""
+    lsh, ivf, dh = (str(tmp_path / n) for n in ("lsh", "ivf", "dh"))
+    build_lsh_index(_corpus(spark, 0, 40), lsh)
+    retract_from_index(spark, lsh, [3, 7])
+    build_ivf_index(_emb(spark, range(60)), ivf, n_cells=4)
+    retract_from_ann_index(spark, ivf, [3, 7])
+    build_dhash_index(_media(spark, 0, 20), dh)
+    retract_from_dhash_index(spark, dh, [3, 7])
+    reads = [
+        (read_verdicts, lsh, "doc_id"),
+        (read_cells, ivf, "vec_id"),
+        (read_dhash_band_rows, dh, "doc_id"),
+    ]
+
+    def snapshot():
+        out = []
+        for read, idx, id_col in reads:
+            df = read(spark, idx, id_col)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            rows = sorted(tuple(r) for r in df.collect())
+            assert not {r[id_col] for r in df.select(id_col).collect()} & {3, 7}
+            out.append((rows, plan.count("FileScan")))
+        return out
+
+    local = snapshot()
+    monkeypatch.setattr(S, "TOMBSTONE_DRIVER_READ_MAX", 0)
+    distributed = snapshot()
+    for (rows_l, scans_l), (rows_d, scans_d) in zip(local, distributed):
+        assert rows_l == rows_d
+        # each side really took its branch: the distributed side adds
+        # the tombstone file scan to the data scan
+        assert (scans_l, scans_d) == (1, 2)
+
+
+def _kmeans_save(spark, d, seq):
+    from ksql_streams_from_schema_converter_spark.operators.clustering import (
+        save_kmeans_model,
+    )
+
+    model = spark.createDataFrame(
+        [("f", 0, 1, [1, 2])],
+        "level string, cluster bigint, sc bigint, c array<bigint>",
+    )
+    return save_kmeans_model(spark, d, model, seq)
+
+
+def _loaders():
+    from ksql_streams_from_schema_converter_spark.operators import (
+        bpe,
+        clustering,
+        langid,
+        quality,
+        text,
+        unigram,
+        wordpiece,
+    )
+
+    return {
+        "kmeans": (_kmeans_save, clustering.load_kmeans_model),
+        "bpe": (
+            lambda spark, d, seq: bpe.save_bpe_merges(spark, d, ["a b"], seq),
+            bpe.load_bpe_merges,
+        ),
+        "wordpiece": (
+            lambda spark, d, seq: wordpiece.save_wordpiece_vocab(spark, d, {"a"}, seq),
+            wordpiece.load_wordpiece_vocab,
+        ),
+        "unigram": (
+            lambda spark, d, seq: unigram.save_unigram_vocab(spark, d, {"a": 1}, seq),
+            unigram.load_unigram_vocab,
+        ),
+        "langid": (
+            lambda spark, d, seq: langid.save_langid_weights(
+                spark, d, {"en": {0: 1}}, seq
+            ),
+            langid.load_langid_weights,
+        ),
+        "quality": (
+            lambda spark, d, seq: quality.save_quality_weights(spark, d, {0: 1}, seq),
+            quality.load_quality_weights,
+        ),
+        "bigram_lm": (
+            lambda spark, d, seq: text.save_bigram_lm(
+                spark,
+                d,
+                spark.createDataFrame(
+                    [("uni", "a", "", 1)], "kind string, w1 string, w2 string, c long"
+                ),
+                seq,
+            ),
+            text.load_bigram_lm,
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["kmeans", "bpe", "wordpiece", "unigram", "langid", "quality", "bigram_lm"],
+)
+def test_versioned_loaders_resolve_through_one_lookup(spark, tmp_path, name):
+    """Every trained-artifact loader resolves its version through
+    ``indexstore.resolve_version``: an empty store and an unknown
+    ``seq`` raise, and no ``seq`` picks the highest one (not the last
+    committed)."""
+    save, load = _loaders()[name]
+    d = str(tmp_path / name)
+    with pytest.raises(ValueError, match="no committed"):
+        load(spark, d)
+    labels = {seq: save(spark, d, seq) for seq in (1, 3, 2)}
+    assert load(spark, d)[1] == labels[3]
+    assert load(spark, d, seq=1)[1] == labels[1]
+    with pytest.raises(ValueError, match="seq=7"):
+        load(spark, d, seq=7)
+
+
+def test_as_of_labels_resolve_in_one_place(tmp_path):
+    """``visible_labels`` is the one as-of resolver: the manifest
+    prefix ending at the label, split into data and tombstone labels;
+    an unknown label fails loudly."""
+    idx = str(tmp_path / "idx")
+    S.commit_ingest(idx, "base", max_id=9)
+    S.commit_ingest(idx, "t1", kind="tombstone")
+    S.commit_ingest(idx, "r1", max_id=19)
+    assert S.visible_labels(idx) == (["base", "r1"], ["t1"])
+    assert S.visible_labels(idx, "base") == (["base"], [])
+    assert S.visible_labels(idx, "t1") == (["base"], ["t1"])
+    with pytest.raises(ValueError, match="not committed"):
+        S.visible_labels(idx, "nope")

@@ -749,3 +749,26 @@ def test_streaming_langid_restart_recovery(spark, tmp_path):
     # at-least-once redelivery converges
     lid_batch(docs.where(F.col("doc_id") % 2 == 1), 1)
     assert _verdicts() == v2
+
+
+def test_stream_to_batch_applies_pipeline_once(spark, tmp_path, monkeypatch):
+    """stream_to_batch shares one applied sink between the writer and
+    the schema read-back: EtlPipeline.apply runs once per drain."""
+    src = str(tmp_path / "src")
+    spark.createDataFrame(ROWS, SCHEMA).write.parquet(src)
+    calls = []
+    orig = EtlPipeline.apply
+
+    def counting(self, df):
+        calls.append(1)
+        return orig(self, df)
+
+    monkeypatch.setattr(EtlPipeline, "apply", counting)
+    out = stream_to_batch(
+        spark,
+        SPEC,
+        spark.readStream.schema(SCHEMA).parquet(src),
+        str(tmp_path / "out"),
+    )
+    assert len(calls) == 1
+    assert out.count() == 3

@@ -10,14 +10,27 @@ fixed-point PageRank (graph.py).  Initialization is deterministic:
 the k lowest-id vectors.  The DuckDB oracle replays the identical
 recurrence as unrolled SQL.
 
-Scale notes: assignment is a broadcast of k centroid rows against the
-point set (k ≪ n — one map-side pass, no shuffle); the update is one
-keyed shuffle of (cluster, dim) partial sums, map-side combined to
-k·dim rows per task.  Iterations are a fixed constant.  This is the
-standard distributed Lloyd's shape; the IVF coarse quantizer
-(similarity.py) uses a driver-side FAISS-style sample training
-instead because its k is larger and its contract is recall-gated —
-this operator is the exactly-gated small-k complement.
+State policy: the centroid state lives on the driver at every k —
+``(cluster, c)`` rows of dim BIGINTs (k·dim int64: 51 MB at k =
+100 000, dim 64) — and the point set is never collected.  A training
+round is one distributed argmin election of the points against a
+broadcast of the state, then one aggregation that collects ONE
+integer-mean row per non-empty cluster; the driver merges those rows
+under the empty-cluster rule (a cluster that owns no points keeps its
+previous centroid).  Two-level models add a coarse Lloyd over the
+state, run on the driver in numpy with O(k·dim) memory.  Iterations
+are a fixed constant.  :data:`KM_STATE_CAP` only chooses driver-side
+or distributed artifact IO in :func:`save_kmeans_model` /
+:func:`load_kmeans_model`.
+
+Model format: a trained model is one DataFrame ``(level, cluster, sc,
+c)``.  ``level='f'`` rows are the fine centroids ``cluster`` with
+quantized vector ``c`` and (two-level models) the super-cell ``sc``
+they route to; ``level='c'`` rows are the coarse centroids ``sc``
+(cluster NULL) of the super-cells that own at least one fine centroid
+— absent in single-level models.  Each trainer is its ``*_fit`` plus
+:func:`assign_frozen`, which is the final round, so scoring under a
+loaded model is value-identical to training in-query.
 """
 
 from __future__ import annotations
@@ -27,6 +40,11 @@ from pyspark.sql import functions as F
 
 #: fixed-point scale: 1.0 == 10⁶ units (floor quantization)
 KM_SCALE = 1_000_000
+
+#: models of at most this many rows are saved and loaded on the driver
+#: (pyarrow, no scheduled job); larger models keep the distributed
+#: parquet write and read
+KM_STATE_CAP = 10_000
 
 
 def quantize_points(
@@ -77,173 +95,103 @@ def kmeans_fixed_point(
     final assignment ``(pid, cluster, dist)`` (dist = integer squared
     L2 to the final centroid — both exact).  Clusters are numbered
     0..k-1 in initialization order (ascending seed id); empty clusters
-    keep their previous centroid (both engines replay the same rule:
-    the update only rewrites clusters that own points).  Assignment
-    elects ``min(struct(dist, cluster))`` — smallest distance, ties to
-    the smallest cluster id — which has no k bound (the former
-    ``dist·keymul + cluster`` modulus key overflowed int64 near
-    k ≈ 9·10⁴ with quantized dist ≈ 10¹⁴; VERDICT r11 weak #1), and
-    the election identity dist = min(dist) makes the final-round
-    distance free (no join-back)."""
-    if n_iter < 1:
-        # the final-assignment return lives INSIDE the loop body;
-        # n_iter=0 would fall through to the unreachable-return below
-        # and surface as a NoneType error far from the cause — and a
-        # bare assert vanishes under ``python -O`` (ADVICE r11)
-        raise ValueError(f"n_iter ({n_iter}) must be >= 1")
-    from .lifecycle import eager_release
-
-    pts = quantize_points(emb, vec_col, id_col).persist()
-    if k <= KM_STATE_CAP:
-        # collect-form rounds (r14, guide §1.2): the k-row centroid
-        # state lives on the driver; per round = ONE distributed
-        # aggregation (election with the vector carried — no point
-        # join-back) collected as k·dim rows, zero checkpoint/broadcast
-        # jobs.  Identical integer recurrence.
-        spark = emb.sparkSession
-        rows = _seed_rows(pts, k)
-        for it in range(n_iter):
-            cents = _cents_rows_df(spark, rows, "int")
-            elected = _elect_q(pts, cents, carry_q=it < n_iter - 1)
-            if it == n_iter - 1:
-                final = elected.select(
-                    "pid",
-                    F.col("__m.c").alias("cluster"),
-                    F.col("__m.d").alias("dist"),
-                )
-                return eager_release(final, pts)
-            rows = _update_rows(elected, rows)
-    cents = _seed_cents(pts, k)
-    for it in range(n_iter):
-        d = pts.crossJoin(F.broadcast(cents))
-        key = _election(_sq_dist(F.col("q"), F.col("c")), F.col("cluster"))
-        elected = d.groupBy("pid").agg(F.min(key).alias("__m"))
-        assigned = elected.select("pid", F.col("__m.c").alias("cluster"))
-        if it == n_iter - 1:
-            # the elected struct already carries the distance to the
-            # ASSIGNED centroid — no join-back needed
-            final = elected.select(
-                "pid",
-                F.col("__m.c").alias("cluster"),
-                F.col("__m.d").alias("dist"),
-            )
-            return eager_release(final, pts)
-        # update: per (cluster, dim) integer mean; clusters that own no
-        # points keep their previous centroid
-        cents = _update_cents(pts, assigned, cents)
-    return None  # unreachable: n_iter >= 1 returns inside the loop
+    keep their previous centroid.  Assignment elects
+    ``min(struct(dist, cluster))`` — smallest distance, ties to the
+    smallest cluster id — which has no k bound, and the elected struct
+    carries the final distance (no join-back).  The final round is
+    :func:`assign_frozen` over :func:`kmeans_fit`'s model."""
+    model = kmeans_fit(emb, k, n_iter, vec_col, id_col)
+    return assign_frozen(emb, model, vec_col, id_col, two_level=False)
 
 
-def _update_cents(pts, asg, cents) -> DataFrame:
-    """One integer-mean centroid update: per (cluster, dim) ``sum div
-    count``; clusters that own no points keep their previous centroid
-    (both engines replay the same rule)."""
-    sums = (
-        pts.join(asg, "pid")
-        .select("cluster", F.posexplode("q").alias("pos", "v"))
-        .groupBy("cluster", "pos")
-        .agg(F.expr("sum(v) div count(*)").alias("cv"))
-    )
-    new_cents = sums.groupBy("cluster").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-            lambda s: s.cv,
-        ).alias("c")
-    )
-    kept = cents.join(new_cents.select("cluster"), "cluster", "left_anti")
-    return new_cents.unionByName(kept).localCheckpoint()
-
-
-def _seed_cents(pts, k) -> DataFrame:
-    """Deterministic init: the k lowest-id vectors, cluster = rank."""
-    from pyspark.sql import Window
-
-    seeds = pts.orderBy("pid").limit(k)
-    return seeds.select(
-        (F.row_number().over(Window.orderBy("pid")) - 1).alias("cluster"),
-        F.col("q").alias("c"),
-    )
-
-
-#: centroid tables at or under this row count run the COLLECT-FORM
-#: rounds (the k-means-centroid bounded-state shape — r14, guide §1.2:
-#: a k-row recurrence scheduled as per-round checkpoint + broadcast
-#: jobs is pure scheduling overhead); larger k keeps the distributed
-#: DataFrame path (the SemDeDup k ∝ corpus posture — VERDICT r13 #1)
-KM_STATE_CAP = 10_000
-
-
-def _seed_rows(pts, k) -> list[tuple[int, list[int]]]:
-    """Collect form of :func:`_seed_cents` — the k lowest-id quantized
-    vectors as ``(cluster, q)`` rows (ONE bounded job); cluster = rank
-    in pid order, exactly the row_number seeding."""
+def _state_rows(pts, k: int, init: DataFrame | None):
+    """The driver-held centroid state ``(cluster, c)`` in cluster
+    order, from one bounded job: a warm-start model's fine centroids
+    (``k`` ignored — the cluster set is the init's), else the k
+    lowest-id quantized vectors with cluster = rank in pid order."""
+    if init is not None:
+        fine = init.where(F.col("level") == "f").select("cluster", "c")
+        return sorted(
+            ((r["cluster"], list(r["c"])) for r in fine.collect()),
+            key=lambda t: t[0],
+        )
     seeds = pts.orderBy("pid").limit(k).collect()
     return [(i, list(r["q"])) for i, r in enumerate(seeds)]
 
 
-def _cents_rows_df(spark, rows, ctype: str) -> DataFrame:
-    """The driver-held centroid state as a LocalRelation ``(cluster,
-    c)`` — downstream broadcasts materialize without a scheduled job."""
+def _model_df(spark, rows) -> DataFrame:
+    """Model rows ``(level, cluster, sc, c)`` as a DataFrame."""
     return spark.createDataFrame(
-        [(c, list(q)) for c, q in rows], f"cluster {ctype}, c array<bigint>"
+        rows, "level string, cluster bigint, sc bigint, c array<bigint>"
     )
 
 
-def _elect_q(pts, cents, carry_q: bool):
-    """One flat argmin election round: ``min(struct(dist, cluster))``
-    per point over a broadcast of the centroid state.  ``carry_q``
-    rides the point's own quantized vector through the aggregation
-    (constant within the pid group, so ``first`` is deterministic and
-    values are untouched) — the update round then needs NO join-back
-    of the point table (r14, guide §2.4: the former
-    ``pts.join(assigned, "pid")`` re-shuffled every vector a second
-    time per round)."""
+def _model_rows(rows, coarse: tuple[int, int] | None):
+    """The model of a centroid state: its fine rows, plus — when
+    ``coarse = (kc, nc_iter)`` — each fine centroid's super-cell from
+    the coarse Lloyd and the coarse rows of the super-cells that own
+    at least one fine centroid."""
+    if coarse is None:
+        return [("f", c, None, q) for c, q in rows]
+    cmap, cc = _coarse_lloyd_py(rows, *coarse)
+    sc_of = dict(cmap)
+    used = set(sc_of.values())
+    return [("f", c, sc_of[c], q) for c, q in rows] + [
+        ("c", None, sc, v) for sc, v in cc if sc in used
+    ]
+
+
+def _train(emb, k, n_iter, vec_col, id_col, init, coarse) -> DataFrame:
+    """The one Lloyd loop of both trainers: ``n_iter - 1`` rounds of
+    election against the current model and integer-mean update of the
+    driver-held state; returns the final model."""
+    spark = emb.sparkSession
+    pts = quantize_points(emb, vec_col, id_col).persist()
+    rows = _state_rows(pts, k, init)
+    for _ in range(n_iter - 1):
+        model = _model_df(spark, _model_rows(rows, coarse))
+        elected = _elect(pts, model, coarse is not None, carry_q=True)
+        rows = _update_rows(elected, rows)
+    pts.unpersist()
+    return _model_df(spark, _model_rows(rows, coarse))
+
+
+def _elect(pts, model, two_level: bool, carry_q: bool = False) -> DataFrame:
+    """One argmin election of the quantized points against a model:
+    per point ``__m = min(struct(dist, cluster))`` over every fine
+    centroid, or over the fine centroids of the point's routed
+    super-cell (:func:`_two_level_elect`).  ``carry_q`` rides the
+    point's own vector out as ``__q`` (constant within the pid group,
+    so ``first`` is deterministic): the update round then needs no
+    join-back of the point table."""
+    fine = model.where(F.col("level") == "f")
+    if two_level:
+        cand = _two_level_elect(pts, model).join(
+            F.broadcast(fine.select("sc", "cluster", "c")), "sc"
+        )
+    else:
+        cand = pts.crossJoin(F.broadcast(fine.select("cluster", "c")))
     key = _election(_sq_dist(F.col("q"), F.col("c")), F.col("cluster"))
     aggs = [F.min(key).alias("__m")]
     if carry_q:
         aggs.append(F.first("q").alias("__q"))
-    return pts.crossJoin(F.broadcast(cents)).groupBy("pid").agg(*aggs)
+    return cand.groupBy("pid").agg(*aggs)
 
 
-def _update_rows(elected, prev_rows):
-    """Collect form of :func:`_update_cents` over an election that
-    carries ``__q``: one distributed per-(cluster, dim) integer-mean
-    aggregation (``sum div count`` — the identical expression),
-    collected as k·dim bounded rows and merged driver-side under the
-    same empty-cluster rule (clusters that own no points keep their
-    previous centroid)."""
-    key_col = "__m" if "__m" in elected.columns else "__key"
-    sums = (
-        elected.select(
-            F.col(f"{key_col}.c").alias("cluster"),
-            F.posexplode("__q").alias("pos", "v"),
-        )
-        .groupBy("cluster", "pos")
-        .agg(F.expr("sum(v) div count(*)").alias("cv"))
-        .collect()
+def _update_rows(elected, rows):
+    """One integer-mean update of the driver-held state from an
+    election that carries ``__q``: per cluster and dimension ``sum
+    div count``, aggregated map-side into ONE row per non-empty
+    cluster and collected; clusters that own no points keep their
+    previous centroid (both engines replay the same rule)."""
+    dim = len(rows[0][1]) if rows else 0
+    means = elected.groupBy(F.col("__m.c").alias("cluster")).agg(
+        F.array(
+            *(F.expr(f"sum(__q[{i}]) div count(*)") for i in range(dim))
+        ).alias("c")
     )
-    by: dict[int, dict[int, int]] = {}
-    for r in sums:
-        by.setdefault(r["cluster"], {})[r["pos"]] = r["cv"]
-    return [
-        (c, [d[p] for p in sorted(d)]) if (d := by.get(c)) is not None else (c, q)
-        for c, q in prev_rows
-    ]
-
-
-def _bounded_init_rows(init: DataFrame):
-    """Fine-centroid rows of a warm-start model IF the state is
-    bounded: collects at most ``KM_STATE_CAP + 1`` rows (one job) and
-    returns ``(rows, ctype)``, or ``(None, None)`` when the model
-    exceeds the cap — the caller then keeps the distributed path."""
-    fine = init.where(F.col("level") == "f").select("cluster", "c")
-    rows = fine.limit(KM_STATE_CAP + 1).collect()
-    if len(rows) > KM_STATE_CAP:
-        return None, None
-    ctype = fine.schema["cluster"].dataType.simpleString()
-    out = [(r["cluster"], list(r["c"])) for r in rows]
-    out.sort(key=lambda t: t[0])
-    return out, ctype
+    new = {r["cluster"]: list(r["c"]) for r in means.collect()}
+    return [(c, new.get(c, q)) for c, q in rows]
 
 
 def _kmeans_chain_sql(
@@ -390,12 +338,18 @@ def _semdedup_prune(
     """The SemDeDup prune stage over an arbitrary assignment ``(pid,
     cluster, dist)``: within-cluster dominated-pair join under the
     exact integer cosine test, keep anti-join — shared by the
-    single-level (:func:`semdedup_kmeans`, paper-exact control) and
-    two-level (:func:`semdedup_two_level`, the k ∝ corpus scale path)
-    front ends; the DataFrame ops are byte-identical to the original
-    inlined body so existing hashes are unchanged."""
-    tau2 = tau_centi * tau_centi
-    feat = (
+    single-level, two-level and frozen-model front ends; the streaming
+    batch (:func:`semdedup_batch_verdicts`) runs the same three
+    steps."""
+    feat = _semdedup_features(emb, asg, vec_col, id_col)
+    return _keep_verdicts(feat, _semdedup_drops(feat, tau_centi), id_col)
+
+
+def _semdedup_features(emb, asg, vec_col, id_col) -> DataFrame:
+    """``(pid, cluster, dist, q, nq)``: the assignment with each
+    point's quantized vector and squared norm, checkpointed because
+    the pair self-join reads it twice."""
+    return (
         asg.join(quantize_points(emb, vec_col, id_col), "pid")
         .withColumn(
             "nq",
@@ -405,18 +359,16 @@ def _semdedup_prune(
                 lambda acc, v: acc + v,
             ),
         )
-        .localCheckpoint(eager=True)  # the self-join reads it twice
+        .localCheckpoint(eager=True)
     )
-    l, r = feat.alias("l"), feat.alias("r")
-    dominates = (F.col("l.dist") > F.col("r.dist")) | (
-        (F.col("l.dist") == F.col("r.dist")) & (F.col("l.pid") < F.col("r.pid"))
-    )
-    cand = l.join(
-        r,
-        (F.col("l.cluster") == F.col("r.cluster"))
-        & (F.col("l.pid") != F.col("r.pid"))
-        & dominates,
-    ).select(
+
+
+def _pairs(l: DataFrame, r: DataFrame, on) -> DataFrame:
+    """Candidate pairs ``(pid, dot, na, nb)`` of the join of ``l``
+    (aliased "l", the member that would be kept) and ``r`` (aliased
+    "r", the member that may drop): r's id, the integer dot product
+    and both squared norms."""
+    return l.join(r, on).select(
         F.col("r.pid").alias("pid"),
         F.aggregate(
             F.zip_with("l.q", "r.q", lambda x, y: x * y),
@@ -426,7 +378,32 @@ def _semdedup_prune(
         F.col("l.nq").alias("na"),
         F.col("r.nq").alias("nb"),
     )
-    drops = (
+
+
+def _semdedup_drops(
+    feat: DataFrame, tau_centi: int, extra: DataFrame | None = None
+) -> DataFrame:
+    """Distinct dropped ids: the within-cluster dominated pairs (the
+    member farther from its centroid is kept, ties on the integer
+    distance to the smaller id), plus ``extra`` candidates, under the
+    exact cosine test ``dot >= 0 AND (dot*100)² >= |a|²·tau²·|b|²``
+    with DECIMAL intermediates, so boundary pairs hash across
+    engines."""
+    tau2 = tau_centi * tau_centi
+    l, r = feat.alias("l"), feat.alias("r")
+    dominates = (F.col("l.dist") > F.col("r.dist")) | (
+        (F.col("l.dist") == F.col("r.dist")) & (F.col("l.pid") < F.col("r.pid"))
+    )
+    cand = _pairs(
+        l,
+        r,
+        (F.col("l.cluster") == F.col("r.cluster"))
+        & (F.col("l.pid") != F.col("r.pid"))
+        & dominates,
+    )
+    if extra is not None:
+        cand = cand.unionByName(extra)
+    return (
         cand.where(
             (F.col("dot") >= 0)
             & (
@@ -441,14 +418,16 @@ def _semdedup_prune(
         .select("pid")
         .distinct()
     )
-    return (
-        feat.join(drops.withColumn("__d", F.lit(1)), "pid", "left")
-        .select(
-            F.col("pid").alias(id_col),
-            "cluster",
-            "dist",
-            F.col("__d").isNull().alias("keep"),
-        )
+
+
+def _keep_verdicts(feat: DataFrame, drops: DataFrame, id_col: str) -> DataFrame:
+    """``(id, cluster, dist, keep)`` for every feature row: kept iff
+    its id is not among the drops."""
+    return feat.join(drops.withColumn("__d", F.lit(1)), "pid", "left").select(
+        F.col("pid").alias(id_col),
+        "cluster",
+        "dist",
+        F.col("__d").isNull().alias("keep"),
     )
 
 
@@ -549,117 +528,64 @@ def kmeans_two_level(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Lloyd's k-means with a TWO-LEVEL assignment (VERDICT r10 #1):
-    instead of testing every point against all k centroids (the n·k
-    flop term that goes quadratic when SemDeDup scales k with the
-    corpus), each round first clusters the k CENTROIDS themselves into
-    ``kc`` super-cells (an exact integer Lloyd over a k-row table —
-    k·kc·nc_iter flops, negligible), then every point routes to its
-    nearest non-empty super-cell (n·kc) and runs the exact argmin only
-    against the fine centroids INSIDE that super-cell (n·k/kc expected)
-    — the IVF ``assign_cells`` discipline (similarity.py:71) applied
-    to the trainer itself.  With kc ≈ √k the per-point work drops from
-    k to ~2√k distance evaluations.
+    """Lloyd's k-means with a TWO-LEVEL assignment: instead of testing
+    every point against all k centroids (the n·k flop term that goes
+    quadratic when SemDeDup scales k with the corpus), each round
+    first clusters the k CENTROIDS themselves into ``kc`` super-cells
+    (an exact integer Lloyd over the k-row state — k·kc·nc_iter
+    flops, on the driver), then every point routes to its nearest
+    non-empty super-cell (n·kc) and runs the exact argmin only against
+    the fine centroids INSIDE that super-cell (n·k/kc expected) — the
+    IVF ``assign_cells`` discipline (similarity.py) applied to the
+    trainer itself.  With kc ≈ √k the per-point work drops from k to
+    ~2√k distance evaluations.
 
     This changes WHICH clustering is produced (a point whose true
     nearest centroid lives in a different super-cell takes the in-cell
     argmin instead — standard IVF behavior), NOT whether it hashes:
     every step is the same deterministic integer arithmetic as
     :func:`kmeans_fixed_point` — quantized BIGINT vectors, argmin via
-    the ``min(struct(dist, id))`` election (no k bound — VERDICT r11
-    weak #1), integer-mean updates, empty cells keeping their
-    previous centroid — and the DuckDB oracle
-    (:func:`kmeans_two_level_oracle_sql`) replays the identical
+    the ``min(struct(dist, id))`` election, integer-mean updates,
+    empty cells keeping their previous centroid — and the DuckDB
+    oracle (:func:`kmeans_two_level_oracle_sql`) replays the identical
     two-level recurrence round for round.
 
     Returns the final assignment ``(pid, cluster, dist)`` exactly like
-    :func:`kmeans_fixed_point` (dist decodes from the argmin key, so it
-    is the integer squared L2 to the ASSIGNED fine centroid).
-
-    Scale: the coarse Lloyd runs on the k-row centroid table; point
-    routing broadcasts kc rows; the in-cell argmin broadcasts the k
-    (cluster, super-cell, centroid) rows but each point row only joins
-    its routed super-cell's bucket, so the flop budget is
-    n·(kc + k/kc) per round instead of n·k.  All collects remain
-    bounded (none — everything stays in DataFrames)."""
-    if kc > k:
-        raise ValueError(f"kc ({kc}) must be <= k ({k})")
-    # bare asserts vanish under ``python -O``: nc_iter=0 leaves
-    # cmap=None (confusing NoneType crash), n_iter=0 silently returns
-    # None (ADVICE r11)
-    if n_iter < 1:
-        raise ValueError(f"n_iter ({n_iter}) must be >= 1")
-    if nc_iter < 1:
-        raise ValueError(f"nc_iter ({nc_iter}) must be >= 1")
-    from .lifecycle import eager_release
-
-    pts = quantize_points(emb, vec_col, id_col).persist()
-    if k <= KM_STATE_CAP:
-        # collect-form rounds (r14, guide §1.2): centroid state on the
-        # driver, coarse Lloyd with zero scheduled jobs (_coarse_local),
-        # one aggregation job per update round, vectors carried through
-        # the election so no point-table join-back.
-        spark = emb.sparkSession
-        rows = _seed_rows(pts, k)
-        for it in range(n_iter):
-            cmap, ccents, ne = _coarse_local(spark, rows, "int", kc, nc_iter)
-            cents = _cents_rows_df(spark, rows, "int")
-            assigned = _two_level_elect(
-                pts, cents, cmap, ccents, ne, carry_q=it < n_iter - 1
-            )
-            if it == n_iter - 1:
-                final = assigned.select(
-                    "pid",
-                    F.col("__key.c").alias("cluster"),
-                    F.col("__key.d").alias("dist"),
-                )
-                return eager_release(final, pts)
-            rows = _update_rows(assigned, rows)
-    cents = _seed_cents(pts, k).localCheckpoint()
-    for it in range(n_iter):
-        cmap, ccents = _coarse_structures(cents, kc, nc_iter)
-        assigned = _two_level_elect(pts, cents, cmap, ccents)
-        if it == n_iter - 1:
-            final = assigned.select(
-                "pid",
-                F.col("__key.c").alias("cluster"),
-                F.col("__key.d").alias("dist"),
-            )
-            return eager_release(final, pts)
-        asg2 = assigned.select("pid", F.col("__key.c").alias("cluster"))
-        cents = _update_cents(pts, asg2, cents)
-    return None  # unreachable: n_iter >= 1 returns inside the loop
+    :func:`kmeans_fixed_point`: :func:`assign_frozen` over
+    :func:`kmeans_two_level_fit`'s model.  Scale: point routing
+    broadcasts the kc coarse rows, the in-cell argmin broadcasts the k
+    fine rows but each point joins only its routed super-cell's
+    bucket, so the flop budget is n·(kc + k/kc) per round."""
+    model = kmeans_two_level_fit(emb, k, kc, n_iter, nc_iter, vec_col, id_col)
+    return assign_frozen(emb, model, vec_col, id_col, two_level=True)
 
 
 def _coarse_lloyd_py(
     cpts: list[tuple[int, list[int]]], kc: int, nc_iter: int
 ) -> tuple[list[tuple[int, int]], list[tuple[int, list[int]]]]:
-    """The coarse Lloyd recurrence over the collected k centroid rows,
-    in exact integer Python — bit-identical to the former in-plan
-    chain: seeds = the ``kc`` lowest-cpid centroids (sc = rank),
-    assignment elects ``min((dist, sc))`` (the struct election),
-    updates are per-dimension ``sum div count`` with Spark's
-    truncate-toward-zero ``div`` semantics, empty super-cells keep
-    their previous centroid.  Returns ``(cmap rows (cpid, sc),
-    ccents rows (sc, cc))``."""
+    """The coarse Lloyd recurrence over the k fine centroid rows, in
+    exact numpy int64 (the BIGINT math of the SQL chain): seeds = the
+    ``kc`` lowest-cpid centroids (sc = rank), assignment elects
+    ``min((dist, sc))`` as a running argmin over the super-cells with
+    strict ``<`` (ties stay with the smallest sc), updates are
+    per-dimension ``sum div count`` with Spark's truncate-toward-zero
+    ``div`` (replayed sign-split), empty super-cells keep their
+    previous centroid.  Peak memory is O(k·dim), never k·kc·dim.
+    Returns ``(cmap rows (cpid, sc), ccents rows (sc, cc))``."""
     import numpy as np
 
-    # numpy int64 replay (VERDICT r13 #5): the documented semdedup
-    # scale path is k ∝ corpus, where the pure-Python O(k·kc·dim·
-    # nc_iter) loop was a single-threaded driver cliff.  Same exact
-    # integer recurrence — int64 arithmetic matches the BIGINT math of
-    # the former in-plan chain; argmin over sc-ascending rows IS the
-    # min((dist, sc)) tie-break; the truncate-toward-zero div is
-    # replayed sign-split.
-    ordered = sorted(cpts)
+    ordered = sorted(cpts, key=lambda t: t[0])
     cpids = [cpid for cpid, _ in ordered]
     cp = np.array([q for _, q in ordered], dtype=np.int64)  # k × dim
     cc = cp[:kc].copy()  # seeds: the kc lowest-cpid centroids, sc = rank
-    assign = None
     for j in range(nc_iter):
-        # k × kc squared L2; argmin ties to the smallest sc (first hit)
-        d = ((cp[:, None, :] - cc[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
+        best = ((cp - cc[0]) ** 2).sum(axis=1)
+        assign = np.zeros(len(cp), dtype=np.int64)
+        for sc in range(1, len(cc)):
+            d = ((cp - cc[sc]) ** 2).sum(axis=1)
+            closer = d < best
+            best[closer] = d[closer]
+            assign[closer] = sc
         if j == nc_iter - 1:
             break
         new = cc.copy()  # empty super-cells keep their centroid
@@ -669,97 +595,29 @@ def _coarse_lloyd_py(
             new[sc] = np.where(s >= 0, s // n, -((-s) // n))
         cc = new
     return (
-        sorted(zip(cpids, (int(sc) for sc in assign))),
+        list(zip(cpids, (int(sc) for sc in assign))),
         [(i, [int(x) for x in cc[i]]) for i in range(len(cc))],
     )
 
 
-def _coarse_structures(cents, kc, nc_iter):
-    """One round's coarse Lloyd over the k centroid rows: returns
-    ``(cmap, ccents)`` where cmap ``(cpid, sc)`` maps each fine
-    centroid to its super-cell and ccents ``(sc, cc)`` are the coarse
-    centroids.
-
-    r13 shape (guide §1.2): the recurrence iterates a k-row table —
-    bounded driver state, the k-means-centroid shape itself — so its
-    former 2-3 distributed checkpoint jobs per round were pure
-    scheduling overhead at every scale.  Collect the k rows once
-    (cheap: ``cents`` is checkpointed by both callers) and replay the
-    identical integer recurrence in Python (:func:`_coarse_lloyd_py`);
-    the results return as LocalRelation DataFrames, so the downstream
-    broadcast joins materialize WITHOUT a scheduled job.  Values and
-    dtypes are bit-identical (cpid keeps the input's cluster dtype —
-    int for cold chains, bigint for warm-started ones)."""
-    rows = [
-        (r["cpid"], list(r["cq"]))
-        for r in cents.select(
-            F.col("cluster").alias("cpid"), F.col("c").alias("cq")
-        ).collect()
-    ]
-    spark = cents.sparkSession
-    ctype = cents.schema["cluster"].dataType.simpleString()
-    cmap, ccents, _ = _coarse_local(spark, rows, ctype, kc, nc_iter)
-    return cmap, ccents
-
-
-def _coarse_local(spark, rows, ctype: str, kc: int, nc_iter: int):
-    """Coarse structures straight from driver-held centroid rows (the
-    collect-form rounds — zero scheduled jobs): ``(cmap, ccents, ne)``
-    LocalRelations, where ``ne`` is the non-empty super-cell table
-    pre-filtered driver-side so :func:`_two_level_elect` broadcasts it
-    without a join job."""
-    cmap_rows, cc_rows = _coarse_lloyd_py(
-        [(c, list(q)) for c, q in rows], kc, nc_iter
+def _two_level_elect(pts, model) -> DataFrame:
+    """Route every point to its nearest super-cell: ``(pid, sc, q)``
+    from the election ``min(struct(dist, sc))`` over the model's
+    coarse rows.  A model holds only super-cells that own at least one
+    fine centroid, so no routed point can miss in-cell candidates
+    (both engines replay the same non-empty rule).  The election
+    carries the point's vector, so the in-cell argmin joins the
+    bounded fine broadcast directly instead of re-shuffling the point
+    table back through ``pts.join(route, "pid")``."""
+    coarse = model.where(F.col("level") == "c").select(
+        "sc", F.col("c").alias("cc")
     )
-    used = {sc for _, sc in cmap_rows}
-    cmap = spark.createDataFrame(cmap_rows, f"cpid {ctype}, sc int")
-    ccents = spark.createDataFrame(cc_rows, "sc int, cc array<bigint>")
-    ne = spark.createDataFrame(
-        [(sc, cc) for sc, cc in cc_rows if sc in used],
-        "sc int, cc array<bigint>",
-    )
-    return cmap, ccents, ne
-
-
-def _two_level_elect(pts, cents, cmap, ccents, ne=None, carry_q=False):
-    """Route every point to its nearest NON-EMPTY super-cell, then run
-    the exact argmin over the routed cell's fine centroids; returns the
-    elected ``(pid, __key)`` with ``__key = struct(dist, cluster)``.
-    Routing is restricted to super-cells that own >= 1 fine centroid —
-    a point routed to an empty cell would find no fine candidates and
-    silently drop out of the assignment (both engines replay the same
-    rule).
-
-    r14 shape (guide §2.4): the routing election CARRIES the point's
-    quantized vector (constant within the pid group — ``first`` is
-    deterministic and values are untouched), so the in-cell fine argmin
-    joins the bounded ``cellcents`` broadcast directly instead of
-    re-shuffling the whole point table back through ``pts.join(route,
-    "pid")`` — one full exchange of the vectors removed per round at
-    every scale.  ``ne`` (the non-empty super-cell table) may be passed
-    precomputed (a LocalRelation in the collect-form rounds — its
-    broadcast then schedules no job); ``carry_q`` additionally rides
-    the vector out of the final election for a join-free update round."""
-    if ne is None:
-        ne = ccents.join(cmap.select("sc").distinct(), "sc")
-    rkey = _election(_sq_dist(F.col("q"), F.col("cc")), F.col("sc"))
-    route = (
-        pts.crossJoin(F.broadcast(ne))
-        .groupBy("pid")
-        .agg(F.min(rkey).alias("__rk"), F.first("q").alias("q"))
-        .select("pid", F.col("__rk.c").alias("sc"), "q")
-    )
-    cellcents = cents.join(
-        cmap.select(F.col("cpid").alias("cluster"), "sc"), "cluster"
-    )
-    fkey = _election(_sq_dist(F.col("q"), F.col("c")), F.col("cluster"))
-    aggs = [F.min(fkey).alias("__key")]
-    if carry_q:
-        aggs.append(F.first("q").alias("__q"))
+    key = _election(_sq_dist(F.col("q"), F.col("cc")), F.col("sc"))
     return (
-        route.join(F.broadcast(cellcents), "sc")
+        pts.crossJoin(F.broadcast(coarse))
         .groupBy("pid")
-        .agg(*aggs)
+        .agg(F.min(key).alias("__rk"), F.first("q").alias("q"))
+        .select("pid", F.col("__rk.c").alias("sc"), "q")
     )
 
 
@@ -993,21 +851,11 @@ def semdedup_two_level_oracle_sql(
 
 
 # ===========================================================================
-# Frozen-model lifecycle (VERDICT r11 #4): the clusterer was the one
-# trained-artifact family without a save/load path — quality weights,
-# WordPiece, BPE, unigram and the bigram LM all persist through the
-# indexstore manifest; these functions give the k-means family the same
-# discipline.  A MODEL is one DataFrame (level, cluster, sc, c):
-#
-# - ``level='f'``: fine centroid ``cluster`` with quantized vector ``c``
-#   and (two-level models only) its routed super-cell ``sc``;
-# - ``level='c'``: coarse centroid ``sc`` with vector ``c`` (cluster
-#   NULL) — absent in single-level models.
-#
-# ``assign_frozen(emb, model)`` reproduces the trainer's FINAL-round
-# assignment exactly (pinned by tests), so scoring under a loaded model
-# is value-identical to training in-query — the streaming SemDeDup
-# stage runs per batch against the frozen artifact, never retraining.
+# Frozen-model lifecycle: the k-means family persists through the
+# indexstore manifest like the quality weights, tokenizers and bigram LM.
+# ``assign_frozen(emb, model)`` IS the trainers' final round, so the
+# streaming SemDeDup stage runs per batch against the frozen artifact,
+# never retraining.  The model format is in the module docstring.
 # ===========================================================================
 
 #: store subdirectory for persisted k-means models
@@ -1036,50 +884,7 @@ def kmeans_fit(
     DuckDB chain replays it via ``init_sql``."""
     if n_iter < 1:
         raise ValueError(f"n_iter ({n_iter}) must be >= 1")
-    from .lifecycle import eager_release
-
-    pts = quantize_points(emb, vec_col, id_col).persist()
-    # collect-form rounds under the state cap (r14, guide §1.2): the
-    # k-row state stays on the driver, one aggregation job per update
-    # round, and the returned model is a LocalRelation (no checkpoint
-    # job; downstream broadcasts are job-free)
-    rows = ctype = None
-    if init is not None:
-        rows, ctype = _bounded_init_rows(init)
-    elif k <= KM_STATE_CAP:
-        rows, ctype = _seed_rows(pts, k), "int"
-    if rows is not None:
-        spark = emb.sparkSession
-        for _ in range(n_iter - 1):
-            cents = _cents_rows_df(spark, rows, ctype)
-            rows = _update_rows(_elect_q(pts, cents, carry_q=True), rows)
-        pts.unpersist()
-        return _cents_rows_df(emb.sparkSession, rows, ctype).select(
-            F.lit("f").alias("level"),
-            F.col("cluster").cast("bigint").alias("cluster"),
-            F.lit(None).cast("bigint").alias("sc"),
-            "c",
-        )
-    if init is not None:
-        cents = init.where(F.col("level") == "f").select("cluster", "c")
-    else:
-        cents = _seed_cents(pts, k)
-    for _ in range(n_iter - 1):
-        key = _election(_sq_dist(F.col("q"), F.col("c")), F.col("cluster"))
-        assigned = (
-            pts.crossJoin(F.broadcast(cents))
-            .groupBy("pid")
-            .agg(F.min(key).alias("__m"))
-            .select("pid", F.col("__m.c").alias("cluster"))
-        )
-        cents = _update_cents(pts, assigned, cents)
-    model = cents.select(
-        F.lit("f").alias("level"),
-        F.col("cluster").cast("bigint").alias("cluster"),
-        F.lit(None).cast("bigint").alias("sc"),
-        "c",
-    )
-    return eager_release(model, pts)
+    return _train(emb, k, n_iter, vec_col, id_col, init, None)
 
 
 def kmeans_two_level_fit(
@@ -1096,85 +901,24 @@ def kmeans_two_level_fit(
     :func:`kmeans_two_level` recurrence (coarse Lloyd → routing →
     in-cell argmin → fine update), then the FINAL round's coarse
     structures — the model carries the fine centroids WITH their
-    super-cell routing (level='f') plus the coarse centroids
+    super-cell routing (level='f') plus the non-empty coarse centroids
     (level='c'), so :func:`assign_frozen` replays exactly the final
     round's two-level assignment.
 
     ``init`` WARM-STARTS the recurrence from a previous model's FINE
-    centroids (``k`` is ignored; the cluster set is the init's) —
-    VERDICT r12 #3: the scale path gets the same scheduled-retrain
-    posture as :func:`kmeans_fit`.  Only the fine centroids carry
-    over; the coarse structures are re-derived from them each round
-    exactly as the recurrence always does (they are a pure function of
-    the current fine centroid table), so the warm chain replays as
-    SQL via ``_kmeans2_chain_sql(init_sql=...)``."""
+    centroids (``k`` is ignored; the cluster set is the init's), the
+    same scheduled-retrain posture as :func:`kmeans_fit`.  Only the
+    fine centroids carry over; the coarse structures are re-derived
+    from them each round exactly as the recurrence always does (they
+    are a pure function of the current fine centroid table), so the
+    warm chain replays as SQL via ``_kmeans2_chain_sql(init_sql=...)``."""
     if init is None and kc > k:
         raise ValueError(f"kc ({kc}) must be <= k ({k})")
     if n_iter < 1:
         raise ValueError(f"n_iter ({n_iter}) must be >= 1")
     if nc_iter < 1:
         raise ValueError(f"nc_iter ({nc_iter}) must be >= 1")
-    from .lifecycle import eager_release
-
-    pts = quantize_points(emb, vec_col, id_col).persist()
-    rows = ctype = None
-    if init is not None:
-        rows, ctype = _bounded_init_rows(init)
-    elif k <= KM_STATE_CAP:
-        rows, ctype = _seed_rows(pts, k), "int"
-    if rows is not None:
-        # collect-form rounds (r14): driver-held state, job-free coarse
-        # Lloyd, one aggregation job per update round, and the model
-        # returns as a LocalRelation built from the final rows — no
-        # joins, no checkpoint job.
-        spark = emb.sparkSession
-        for _ in range(n_iter - 1):
-            cmap, ccents, ne = _coarse_local(spark, rows, ctype, kc, nc_iter)
-            cents = _cents_rows_df(spark, rows, ctype)
-            assigned = _two_level_elect(
-                pts, cents, cmap, ccents, ne, carry_q=True
-            )
-            rows = _update_rows(assigned, rows)
-        cmap_rows, cc_rows = _coarse_lloyd_py(
-            [(c, list(q)) for c, q in rows], kc, nc_iter
-        )
-        sc_of = dict(cmap_rows)
-        model_rows = [
-            ("f", int(c), int(sc_of[c]), list(q)) for c, q in rows
-        ] + [("c", None, int(sc), list(cc)) for sc, cc in cc_rows]
-        pts.unpersist()
-        return spark.createDataFrame(
-            model_rows, "level string, cluster bigint, sc bigint, c array<bigint>"
-        )
-    if init is not None:
-        cents = (
-            init.where(F.col("level") == "f")
-            .select("cluster", "c")
-            .localCheckpoint()
-        )
-    else:
-        cents = _seed_cents(pts, k).localCheckpoint()
-    for _ in range(n_iter - 1):
-        cmap, ccents = _coarse_structures(cents, kc, nc_iter)
-        assigned = _two_level_elect(pts, cents, cmap, ccents)
-        asg2 = assigned.select("pid", F.col("__key.c").alias("cluster"))
-        cents = _update_cents(pts, asg2, cents)
-    cmap, ccents = _coarse_structures(cents, kc, nc_iter)
-    fine = cents.join(
-        cmap.select(F.col("cpid").alias("cluster"), "sc"), "cluster"
-    ).select(
-        F.lit("f").alias("level"),
-        F.col("cluster").cast("bigint").alias("cluster"),
-        F.col("sc").cast("bigint").alias("sc"),
-        "c",
-    )
-    coarse = ccents.select(
-        F.lit("c").alias("level"),
-        F.lit(None).cast("bigint").alias("cluster"),
-        F.col("sc").cast("bigint").alias("sc"),
-        F.col("cc").alias("c"),
-    )
-    return eager_release(fine.unionByName(coarse), pts)
+    return _train(emb, k, n_iter, vec_col, id_col, init, (kc, nc_iter))
 
 
 def assign_frozen(
@@ -1184,46 +928,23 @@ def assign_frozen(
     id_col: str = "vec_id",
     two_level: bool | None = None,
 ) -> DataFrame:
-    """Assign vectors to a FROZEN model's clusters — the trainer's
-    final-round assignment replayed without retraining; returns
-    ``(pid, cluster, dist)`` exactly like the trainers.  Single-level
-    models (no coarse rows) take the flat broadcast argmin; two-level
-    models route through the persisted coarse centroids first (the
-    IVF probe discipline).
+    """Assign vectors to a FROZEN model's clusters — the trainers'
+    final round, replayed without retraining; returns ``(pid,
+    cluster, dist)``.  Single-level models take the flat broadcast
+    argmin; two-level models route through the coarse centroids first
+    (the IVF probe discipline).
 
     ``two_level`` selects the branch driver-side with no Spark job —
-    :func:`load_kmeans_model` returns it from the manifest entry
-    (ADVICE r12: the former unconditional ``coarse.limit(1).count()``
-    probe cost the streaming SemDeDup gate one extra action per
-    micro-batch on top of the model read).  ``None`` keeps the bounded
-    probe for ad-hoc model DataFrames whose kind the caller doesn't
-    know."""
-    pts = quantize_points(emb, vec_col, id_col)
-    fine = model.where(F.col("level") == "f")
-    coarse = model.where(F.col("level") == "c")
+    :func:`load_kmeans_model` returns it from the manifest entry.
+    ``None`` runs one bounded probe for ad-hoc model DataFrames whose
+    kind the caller doesn't know."""
     if two_level is None:
-        two_level = coarse.limit(1).count() > 0
-    if not two_level:
-        cents = fine.select("cluster", "c")
-        key = _election(_sq_dist(F.col("q"), F.col("c")), F.col("cluster"))
-        return (
-            pts.crossJoin(F.broadcast(cents))
-            .groupBy("pid")
-            .agg(F.min(key).alias("__m"))
-            .select(
-                "pid",
-                F.col("__m.c").alias("cluster"),
-                F.col("__m.d").alias("dist"),
-            )
-        )
-    cents = fine.select("cluster", "c")
-    cmap = fine.select(F.col("cluster").alias("cpid"), "sc")
-    ccents = coarse.select("sc", F.col("c").alias("cc"))
-    elected = _two_level_elect(pts, cents, cmap, ccents)
+        two_level = model.where(F.col("level") == "c").limit(1).count() > 0
+    elected = _elect(quantize_points(emb, vec_col, id_col), model, two_level)
     return elected.select(
         "pid",
-        F.col("__key.c").alias("cluster"),
-        F.col("__key.d").alias("dist"),
+        F.col("__m.c").alias("cluster"),
+        F.col("__m.d").alias("dist"),
     )
 
 
@@ -1248,13 +969,12 @@ def semdedup_frozen(
 def save_kmeans_model(spark, store_dir: str, model: DataFrame, seq: int) -> str:
     """Persist a trained k-means model as version ``km{seq}``: parquet
     data FIRST, atomic manifest commit LAST (kind="kmeans") — torn
-    saves invisible, replay idempotent.  The artifact is k-sized (k
-    can scale with the corpus under the SemDeDup recipe), so like the
-    bigram LM it is written and read as a DataFrame, never
-    collected.  The manifest entry records ``two_level`` (coarse rows
-    present) so loads can pick the assignment branch driver-side
-    without a probe action per call (ADVICE r12) — one bounded count
-    here, at save time, instead of one per assignment."""
+    saves invisible, replay idempotent.  A model of at most
+    :data:`KM_STATE_CAP` rows is collected once and written
+    driver-side; a larger one keeps the distributed write.  The
+    manifest entry records ``two_level`` (coarse rows present) so
+    loads pick the assignment branch driver-side without a probe
+    action per call."""
     import os
 
     from .indexstore import commit_ingest, ingest_paths, write_artifact_parquet
@@ -1262,12 +982,6 @@ def save_kmeans_model(spark, store_dir: str, model: DataFrame, seq: int) -> str:
     label = f"km{seq}"
     path = ingest_paths(store_dir, KMEANS_SUB, [label])[0]
     cols = model.select("level", "cluster", "sc", "c")
-    # bounded-or-not dispatch (r14, guide §1.2 under the VERDICT r13 #1
-    # scale caveat): a model at or under the state cap — the common
-    # centroid shape — collects once and lands via the driver-side
-    # artifact write (the former two_level probe job + distributed
-    # write job collapse into the one bounded collect); a k ∝ corpus
-    # model past the cap keeps the distributed write.
     rows = cols.limit(KM_STATE_CAP + 1).collect()
     if len(rows) <= KM_STATE_CAP:
         two_level = any(r["level"] == "c" for r in rows)
@@ -1302,8 +1016,13 @@ def load_kmeans_model(
     ``(model, label, two_level)``: the kind flag comes from the
     manifest entry (recorded at save time), so callers pass it to
     :func:`assign_frozen` / :func:`semdedup_frozen` and no probe
-    action runs per assignment (ADVICE r12).  A legacy entry without
-    the flag falls back to one bounded probe here, at load time."""
+    action runs per assignment.  A legacy entry without the flag falls
+    back to one bounded probe here, at load time.
+
+    Coarse rows that no fine row routes to are dropped (stores written
+    before models kept only non-empty super-cells hold them): on the
+    driver for a model of at most :data:`KM_STATE_CAP` rows, read from
+    the parquet footers, else with a left-semi join."""
     from .indexstore import (
         artifact_row_count,
         read_artifact_rows,
@@ -1312,34 +1031,35 @@ def load_kmeans_model(
     )
 
     best = resolve_version(store_dir, "kmeans", seq, "k-means model")
-    # bounded models (parquet FOOTER row count at or under the state
-    # cap — covers legacy Spark-written stores too) load driver-side
-    # and return as a LocalRelation: no scheduled read job per load,
-    # and downstream broadcasts materialize job-free (r14, guide §1.2).
     n = artifact_row_count(store_dir, KMEANS_SUB, [best["label"]])
     if n is not None and n <= KM_STATE_CAP:
         rows = read_artifact_rows(store_dir, KMEANS_SUB, [best["label"]])
-        model = spark.createDataFrame(
+        routed = {r["sc"] for r in rows if r["level"] == "f"}
+        model = _model_df(
+            spark,
             [
                 (r["level"], r["cluster"], r["sc"], list(r["c"]))
                 for r in rows
+                if r["level"] == "f" or r["sc"] in routed
             ],
-            "level string, cluster bigint, sc bigint, c array<bigint>",
         )
     else:
         df = read_ingests(spark, store_dir, KMEANS_SUB, [best["label"]])
-        model = df.select("level", "cluster", "sc", "c")
+        fine = df.where(F.col("level") == "f").select("level", "cluster", "sc", "c")
+        coarse = df.where(F.col("level") == "c").join(
+            fine.select("sc"), "sc", "left_semi"
+        )
+        model = fine.unionByName(coarse.select("level", "cluster", "sc", "c"))
     two_level = best.get("two_level")
-    if two_level is None:  # pre-r13 manifest entry: probe once, at load
+    if two_level is None:  # legacy manifest entry: probe once, at load
         two_level = model.where(F.col("level") == "c").limit(1).count() > 0
     return model, best["label"], bool(two_level)
 
 
 # ===========================================================================
-# Streaming SemDeDup (VERDICT r11 #4, second half): the v7 funnel's
-# dedup stage under foreachBatch against the FROZEN persisted model —
-# the streaming_pretrain_v6 frozen-artifact discipline applied to the
-# clusterer.  Semantics per batch t over the keeper store S_{t-1}:
+# Streaming SemDeDup: the v7 funnel's dedup stage under foreachBatch
+# against the FROZEN persisted model.  Semantics per batch t over the
+# keeper store S_{t-1}:
 #
 # - assign the batch to the frozen model's clusters (assign_frozen);
 # - a batch member DROPS iff (a) some STORED keeper in its cluster
@@ -1371,93 +1091,28 @@ def semdedup_batch_verdicts(
     member and keepers is the keep rows WITH their quantized vector
     and squared norm ``(id, cluster, q, nq)`` — the rows the caller
     appends to the keeper store.  ``stored`` is the prior keeper store
-    (same schema as keepers; None for the first batch).  All
-    arithmetic is the exact integer cosine test of
-    :func:`_semdedup_prune`, so the batch sequence replays as SQL.
-    ``two_level`` as in :func:`assign_frozen` (pass the flag
-    :func:`load_kmeans_model` returns so no probe action runs per
-    micro-batch — ADVICE r12)."""
-    tau2 = tau_centi * tau_centi
+    (same schema as keepers; None for the first batch).  The prune is
+    :func:`_semdedup_prune`'s, plus the stored-keeper candidates, so
+    the batch sequence replays as SQL.  ``two_level`` as in
+    :func:`assign_frozen` (pass the flag :func:`load_kmeans_model`
+    returns so no probe action runs per micro-batch)."""
     asg = assign_frozen(emb_batch, model, vec_col, id_col, two_level)
-    feat = (
-        asg.join(quantize_points(emb_batch, vec_col, id_col), "pid")
-        .withColumn(
-            "nq",
-            F.aggregate(
-                F.expr("transform(q, x -> x * x)"),
-                F.lit(0).cast("bigint"),
-                lambda acc, v: acc + v,
-            ),
-        )
-        .localCheckpoint(eager=True)
-    )
-    l, r = feat.alias("l"), feat.alias("r")
-    dominates = (F.col("l.dist") > F.col("r.dist")) | (
-        (F.col("l.dist") == F.col("r.dist")) & (F.col("l.pid") < F.col("r.pid"))
-    )
-
-    def _dot():
-        return F.aggregate(
-            F.zip_with("l.q", "r.q", lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        )
-
-    cand = l.join(
-        r,
-        (F.col("l.cluster") == F.col("r.cluster"))
-        & (F.col("l.pid") != F.col("r.pid"))
-        & dominates,
-    ).select(
-        F.col("r.pid").alias("pid"),
-        _dot().alias("dot"),
-        F.col("l.nq").alias("na"),
-        F.col("r.nq").alias("nb"),
-    )
+    feat = _semdedup_features(emb_batch, asg, vec_col, id_col)
+    extra = None
     if stored is not None:
-        s = stored.select(
-            F.col(id_col).alias("pid"), "cluster", "q", "nq"
-        ).alias("l")
+        s = stored.select(F.col(id_col).alias("pid"), "cluster", "q", "nq")
         # a pid streams in exactly one batch, so the stored side never
         # meets its own row; committed keepers dominate unconditionally
-        cand_store = s.join(
-            r, F.col("l.cluster") == F.col("r.cluster")
-        ).select(
-            F.col("r.pid").alias("pid"),
-            _dot().alias("dot"),
-            F.col("l.nq").alias("na"),
-            F.col("r.nq").alias("nb"),
+        extra = _pairs(
+            s.alias("l"),
+            feat.alias("r"),
+            F.col("l.cluster") == F.col("r.cluster"),
         )
-        cand = cand.unionByName(cand_store)
-    drops = (
-        cand.where(
-            (F.col("dot") >= 0)
-            & (
-                F.expr(
-                    "CAST(dot * 100 AS DECIMAL(19,0)) * CAST(dot * 100 AS DECIMAL(19,0))"
-                )
-                >= F.expr(
-                    f"CAST(na * {tau2} AS DECIMAL(19,0)) * CAST(nb AS DECIMAL(19,0))"
-                )
-            )
-        )
-        .select("pid")
-        .distinct()
-        # materialize the pair-join verdict once (bounded: dropped-id
-        # list <= batch size): the caller actions BOTH returned frames
-        # (verdict write + keeper write), which otherwise re-runs the
-        # within-batch self-join and the store join per action (r14,
-        # guide §1.2)
-        .localCheckpoint(eager=True)
-    )
-    verdicts = feat.join(
-        drops.withColumn("__d", F.lit(1)), "pid", "left"
-    ).select(
-        F.col("pid").alias(id_col),
-        "cluster",
-        "dist",
-        F.col("__d").isNull().alias("keep"),
-    )
+    # materialize the verdict once (bounded: dropped ids <= batch
+    # size): the caller actions BOTH returned frames (verdict write +
+    # keeper write), which would otherwise re-run the pair joins
+    drops = _semdedup_drops(feat, tau_centi, extra).localCheckpoint(eager=True)
+    verdicts = _keep_verdicts(feat, drops, id_col)
     keepers = (
         verdicts.where("keep")
         .select(F.col(id_col).alias("pid"), "cluster")

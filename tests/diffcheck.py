@@ -14,7 +14,14 @@ from ksql_streams_from_schema_converter_spark.sources.parquet import TABLE_NAMES
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """Oracle connection with one view per table.  DuckDB's
+    statistics-propagation pass is off: on the deep CTE chains of the
+    unrolled oracles (``pretrain_pipeline_v4``, the BPE family) it
+    dominates the query time (single-threaded planning, ~11 minutes
+    for v4 at sf0.001), while every oracle that completes returns the
+    same rows at sf0.001 with it on or off."""
     con = duckdb.connect()
+    con.execute("SET disabled_optimizers = 'statistics_propagation'")
     for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"

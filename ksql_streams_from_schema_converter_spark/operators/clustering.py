@@ -62,25 +62,12 @@ def quantize_points(
     )
 
 
-def _sq_dist(a, b, dim: int | None = None):
-    """Integer squared L2 of two BIGINT arrays.  When the driver knows
-    the dimension, arrays of exactly that length take the unrolled
-    element sum, which Spark compiles into generated code (the lambda
-    form is interpreted element by element); every other pair takes
-    the lambda form.  Both sum left to right in BIGINT, so they give
-    the same value."""
-    hof = F.aggregate(
+def _sq_dist(a, b):
+    return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("bigint"),
         lambda acc, v: acc + v,
     )
-    if dim is None or dim < 1:
-        return hof
-    total = None
-    for i in range(dim):
-        t = (F.get(a, i) - F.get(b, i)) * (F.get(a, i) - F.get(b, i))
-        total = t if total is None else total + t
-    return F.when((F.size(a) == dim) & (F.size(b) == dim), total).otherwise(hof)
 
 
 def _election(dist, cand):
@@ -169,25 +156,22 @@ def _train(emb, k, n_iter, vec_col, id_col, init, coarse) -> DataFrame:
     return _model_df(spark, _model_rows(rows, coarse))
 
 
-def _elect(
-    pts, model, two_level: bool, carry_q: bool = False, dim: int | None = None
-) -> DataFrame:
+def _elect(pts, model, two_level: bool, carry_q: bool = False) -> DataFrame:
     """One argmin election of the quantized points against a model:
     per point ``__m = min(struct(dist, cluster))`` over every fine
     centroid, or over the fine centroids of the point's routed
     super-cell (:func:`_two_level_elect`).  ``carry_q`` rides the
     point's own vector out as ``__q`` (constant within the pid group,
     so ``first`` is deterministic): the update round then needs no
-    join-back of the point table.  ``dim``, when the driver knows it,
-    unrolls the distance (:func:`_sq_dist`)."""
+    join-back of the point table."""
     fine = model.where(F.col("level") == "f")
     if two_level:
-        cand = _two_level_elect(pts, model, dim).join(
+        cand = _two_level_elect(pts, model).join(
             F.broadcast(fine.select("sc", "cluster", "c")), "sc"
         )
     else:
         cand = pts.crossJoin(F.broadcast(fine.select("cluster", "c")))
-    key = _election(_sq_dist(F.col("q"), F.col("c"), dim), F.col("cluster"))
+    key = _election(_sq_dist(F.col("q"), F.col("c")), F.col("cluster"))
     aggs = [F.min(key).alias("__m")]
     if carry_q:
         aggs.append(F.first("q").alias("__q"))
@@ -616,7 +600,7 @@ def _coarse_lloyd_py(
     )
 
 
-def _two_level_elect(pts, model, dim: int | None = None) -> DataFrame:
+def _two_level_elect(pts, model) -> DataFrame:
     """Route every point to its nearest super-cell: ``(pid, sc, q)``
     from the election ``min(struct(dist, sc))`` over the model's
     coarse rows.  A model holds only super-cells that own at least one
@@ -628,7 +612,7 @@ def _two_level_elect(pts, model, dim: int | None = None) -> DataFrame:
     coarse = model.where(F.col("level") == "c").select(
         "sc", F.col("c").alias("cc")
     )
-    key = _election(_sq_dist(F.col("q"), F.col("cc"), dim), F.col("sc"))
+    key = _election(_sq_dist(F.col("q"), F.col("cc")), F.col("sc"))
     return (
         pts.crossJoin(F.broadcast(coarse))
         .groupBy("pid")
@@ -953,23 +937,10 @@ def assign_frozen(
     ``two_level`` selects the branch driver-side with no Spark job —
     :func:`load_kmeans_model` returns it from the manifest entry.
     ``None`` runs one bounded probe for ad-hoc model DataFrames whose
-    kind the caller doesn't know; it also reads the centroid
-    dimension, which unrolls the distance (:func:`_sq_dist`)."""
-    dim = None
+    kind the caller doesn't know."""
     if two_level is None:
-        probe = (
-            model.select(
-                (F.col("level") == "c").alias("coarse"), F.size("c").alias("dim")
-            )
-            .orderBy(F.desc("coarse"))
-            .limit(1)
-            .collect()
-        )
-        two_level = bool(probe) and probe[0]["coarse"]
-        dim = probe[0]["dim"] if probe else None
-    elected = _elect(
-        quantize_points(emb, vec_col, id_col), model, two_level, dim=dim
-    )
+        two_level = model.where(F.col("level") == "c").limit(1).count() > 0
+    elected = _elect(quantize_points(emb, vec_col, id_col), model, two_level)
     return elected.select(
         "pid",
         F.col("__m.c").alias("cluster"),
